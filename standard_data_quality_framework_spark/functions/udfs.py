@@ -1,20 +1,28 @@
 """Vectorized pandas/Arrow UDFs — the ONLY Python that runs on executors.
 
-Exactly four Python stages exist in the whole pipeline (everything else
-is native Catalyst expressions):
+The pipeline's hot path has exactly ONE Python stage,
+``process_page(payload, is_html) -> struct``: extract + langid +
+perplexity + repetition + scrub in one Arrow round trip per batch
+(pipeline.run_quality_filter; everything else is native Catalyst
+expressions). The staged trio below computes the same values one
+step at a time and backs the per-stage pipeline helpers and their
+parity tests, not the hot path:
 
-  1. ``extract_text(html: binary) -> string``   (byte-identical contract)
-  2. ``model_signals(text) -> struct``          (langid + perplexity +
-     repetition signals in ONE Arrow pass — one Python worker round-trip
-     per batch instead of three)
-  3. ``scrub(text) -> struct<scrubbed, edits>`` (byte-identical contract)
+  * ``extract_text(html: binary) -> string``   (byte-identical contract)
+  * ``model_signals(text) -> struct``          (langid + perplexity +
+    repetition signals)
+  * ``scrub(text) -> struct<scrubbed, edits>`` (byte-identical contract)
 
 Model artifacts (langid log-prob matrix ~1 MB, bigram LM ~1 MB) are
-broadcast once per session and lazily referenced inside the UDF closure
-— the classic broadcast-variable pattern, no per-task re-pickling.
+trained and broadcast once per SparkContext — ``make_udfs`` memoizes
+its result on the live context — and lazily referenced inside the UDF
+closure: the classic broadcast-variable pattern, no per-task
+re-pickling.
 """
 
 from __future__ import annotations
+
+import weakref
 
 import pandas as pd
 from pyspark.sql import SparkSession
@@ -52,9 +60,20 @@ _PROCESS_SCHEMA = T.StructType([
 ])
 
 
+# UDF set per SparkContext: a stopped context's broadcasts are dead,
+# and a new context is a new key (weak keys: a dropped context takes
+# its entry with it)
+_UDFS_BY_CONTEXT: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def make_udfs(spark: SparkSession) -> dict:
-    """Build the UDF trio with models broadcast to executors."""
+    """The UDF set with the models broadcast to executors — built once
+    per SparkContext: later calls on the same context return the same
+    UDFs over the same broadcasts, instead of retraining both models
+    and broadcasting them again."""
     sc = spark.sparkContext
+    if sc in _UDFS_BY_CONTEXT:
+        return dict(_UDFS_BY_CONTEXT[sc])
     b_lid = sc.broadcast(train_langid())
     b_ppl = sc.broadcast(train_perplexity())
 
@@ -137,9 +156,11 @@ def make_udfs(spark: SparkSession) -> dict:
         out["scrub_edits"] = out["scrub_edits"].astype("int32")
         return out
 
-    return {
+    udfs = {
         "extract_text": extract_text_udf,
         "model_signals": model_signals_udf,
         "scrub": scrub_udf,
         "process_page": process_page_udf,
     }
+    _UDFS_BY_CONTEXT[sc] = udfs
+    return dict(udfs)

@@ -16,9 +16,17 @@ Formulas (per partition group, default per warc_date):
   pop_representativity = 1 − Σ_c |p_c − 1/k| / (2(1−1/k)) over lang_pred [A3]
   metadata_granularity = docs with (url, warc_ts, lang) all present / docs [A16]
 
-Everything is ONE hash aggregation per group (+ one small groupBy for
-representativity) — map-side partial aggregation applies, no skew
-(dates are the partition key).
+Aggregation shape: ``day_summary`` reads the verdicts with TWO hash
+aggregations — the per-group counters, and the per-(group, lang_pred)
+class counts collected into one class-sorted array per group — joined
+once into ONE small row per group. ``metrics_from_summary``,
+``dropped_by_rule`` and ``lineage_rows`` are projections of that row,
+so a caller that persists the summary feeds all three sinks from one
+verdict pass. Map-side partial aggregation applies to both
+aggregations, and there is no skew (dates are the partition key).
+Every score is integer counts divided after the aggregation, and
+representativity sums its per-class deviations in class order, so
+the metrics do not depend on how the verdicts are partitioned.
 """
 
 from __future__ import annotations
@@ -26,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .config import DIMENSIONS
+from .config import DIMENSIONS, RULE_ORDER
 from .functions.rating import bucket_rating
 
 _RANGE_RULES = ["min_words", "max_words", "mean_word_len",
@@ -37,25 +45,23 @@ def _flag(c) -> F.Column:
     return F.when(c, 1).otherwise(0)
 
 
+def _empty_details() -> F.Column:
+    return F.map_from_entries(
+        F.array().cast("array<struct<key:string,value:string>>"))
+
+
 _META_COLS = ["url", "warc_ts", "text", "lang"]
 
 
-def dimension_metrics(verdicts: DataFrame,
-                      group_col: str = "warc_date") -> DataFrame:
-    """Long-format metrics: one row per (group, dimension) + overall.
-
-    Output: (partition_key string, dimension string, score double,
-             rating int, docs_scanned long, docs_dropped long,
-             scrub_edit_count long, explanation string,
-             details map<string,string>)
-
-    ``details`` completes the reference's (score, explanation, details)
-    3-tuple contract (rating.py:35-39): per-column missing counts for
-    completeness (quality_checks.py:215-242), per-rule flagged counts
-    for accuracy, per-class proportions for representativity
-    (uc4_tabular_quality_checks.py:193-291), and the raw counters
-    behind each ratio score.
-    """
+def day_summary(verdicts: DataFrame,
+                group_col: str = "warc_date") -> DataFrame:
+    """ONE row per group holding every counter the metrics,
+    dropped_by_rule and lineage sinks read: (partition_key,
+    docs_scanned, docs_dropped, docs_kept, scrub_edit_count, the
+    ``_``-prefixed detail counters, ``_drop_<rule>`` per RULE_ORDER
+    rule, and ``_classes`` — the non-null lang_pred class counts as
+    an array<struct<cls, n>> sorted by class, null when every
+    lang_pred of the group is null)."""
     g = F.col(group_col).cast("string").alias("partition_key")
     # ONE coherence predicate shared by the score and its detail
     # counter (null etext → not coherent on BOTH sides; a bare
@@ -69,114 +75,114 @@ def dimension_metrics(verdicts: DataFrame,
         "text": F.col("etext").isNotNull() & (F.length("etext") > 0),
         "lang": F.col("lang").isNotNull() & (F.length("lang") > 0),
     }
+    meta_ok = (F.col("url").isNotNull() & F.col("warc_ts").isNotNull()
+               & F.col("lang").isNotNull() & (F.length("lang") > 0))
+    in_range = ~F.arrays_overlap(
+        "drop_reasons", F.array(*[F.lit(r) for r in _RANGE_RULES]))
     base = verdicts.groupBy(g).agg(
         F.count("*").alias("docs_scanned"),
         F.sum(_flag(~F.col("keep"))).alias("docs_dropped"),
+        F.sum(_flag(F.col("keep"))).alias("docs_kept"),
         F.sum(F.col("scrub_edits").cast("long")).alias("scrub_edit_count"),
-        (F.sum(sum(_flag(p) for p in presence.values()))
-         / (F.count("*") * len(presence))).alias("completeness"),
-        (F.sum(_flag(~F.arrays_overlap(
-            "drop_reasons",
-            F.array(*[F.lit(r) for r in _RANGE_RULES]))))
-         / F.count("*")).alias("accuracy"),
-        (F.sum(_flag(coherent)) / F.count("*")).alias("coherence"),
-        (F.lit(1.0) - F.sum(_flag(F.array_contains(
-            "drop_reasons", "exact_dup"))) / F.count("*"))
-        .alias("semantic_coherence"),
-        (F.count_distinct("url") / F.count("*"))
-        .alias("relational_consistency"),
-        (F.sum(_flag(F.col("url").isNotNull()
-                     & F.col("warc_ts").isNotNull()
-                     & F.col("lang").isNotNull()
-                     & (F.length("lang") > 0))) / F.count("*"))
-        .alias("metadata_granularity"),
-        # detail counters (one pass — same aggregation, more columns)
+        F.sum(sum(_flag(p) for p in presence.values()))
+        .alias("_n_present_cells"),
         *[F.sum(_flag(~p)).alias(f"_missing_{c}")
           for c, p in presence.items()],
-        *[F.sum(_flag(F.array_contains("drop_reasons", r)))
-          .alias(f"_flag_{r}") for r in _RANGE_RULES],
-        F.sum(_flag(F.array_contains("drop_reasons", "exact_dup")))
-        .alias("_n_exact_dup"),
+        F.sum(_flag(in_range)).alias("_n_in_range"),
+        F.sum(_flag(coherent)).alias("_n_coherent"),
         F.sum(_flag(~coherent)).alias("_n_bad_decode"),
         F.count_distinct("url").alias("_n_distinct_urls"),
-        F.sum(_flag(F.col("url").isNotNull()
-                    & F.col("warc_ts").isNotNull()
-                    & F.col("lang").isNotNull()
-                    & (F.length("lang") > 0))).alias("_n_meta_ok"),
+        F.sum(_flag(meta_ok)).alias("_n_meta_ok"),
+        *[F.sum(_flag(F.array_contains("drop_reasons", r)))
+          .alias(f"_drop_{r}") for r in RULE_ORDER],
     )
+    # population classes over lang_pred — nulls dropped BEFORE
+    # counting, matching the reference's remove-NA step
+    # (quality_checks.py valid_data): null is missing data (a
+    # completeness problem), not a population class
+    classes = (verdicts.filter(F.col("lang_pred").isNotNull())
+               .groupBy(g, "lang_pred").agg(F.count("*").alias("n"))
+               .groupBy("partition_key")
+               .agg(F.array_sort(F.collect_list(F.struct(
+                   F.col("lang_pred").alias("cls"), "n")))
+                   .alias("_classes")))
+    return base.join(classes, "partition_key", "left")
 
-    # population representativity (A3, total-deviation) over lang_pred
-    # — nulls dropped BEFORE counting classes, matching the reference's
-    # remove-NA step (quality_checks.py valid_data): null is missing
-    # data (a completeness problem), not a population class
-    counts = (verdicts.filter(F.col("lang_pred").isNotNull())
-              .groupBy(g, "lang_pred")
-              .agg(F.count("*").alias("n")))
-    rep = counts.groupBy("partition_key").agg(
-        F.count("*").alias("k"),
-        F.sum("n").alias("total"),
-    )
-    dev = (counts
-           .join(rep.select("partition_key", "k", "total"), "partition_key")
-           .groupBy("partition_key", "k")
-           .agg(F.sum(F.abs(F.col("n") / F.col("total")
-                            - 1.0 / F.col("k"))).alias("total_dev")))
-    # k<=1 → 0.0: reference parity (quality_checks.py:25-29, single
-    # class is maximally unrepresentative)
-    rep_score = dev.select(
-        "partition_key",
-        F.when(F.col("k") <= 1, F.lit(0.0)).otherwise(
-            F.lit(1.0) - F.col("total_dev")
-            / (2.0 * (1.0 - 1.0 / F.col("k"))))
-        .alias("population_representativity"))
 
-    # per-class proportion map (uc4:193-291 per-class details) — the
-    # map entries are sorted by class for a deterministic layout
-    rep_details = (counts
-                   .join(rep.select("partition_key", "total"),
-                         "partition_key")
-                   .groupBy("partition_key")
-                   .agg(F.map_from_entries(F.array_sort(F.collect_list(
-                       F.struct(
-                           F.col("lang_pred").alias("key"),
-                           F.round(F.col("n") / F.col("total"), 6)
-                           .cast("string").alias("value")))))
-                       .alias("_rep_details")))
+def metrics_from_summary(summary: DataFrame) -> DataFrame:
+    """Long-format metrics from ``day_summary``: one row per (group,
+    dimension) + overall.
 
-    # a group whose lang_pred is ALL null has no rep rows at all —
-    # score 0.0 (nothing representable), empty details
-    _empty_details = F.map_from_entries(
-        F.array().cast("array<struct<key:string,value:string>>"))
-    wide = (base.join(rep_score, "partition_key", "left")
-            .join(rep_details, "partition_key", "left")
-            .withColumn("population_representativity",
-                        F.coalesce("population_representativity",
-                                   F.lit(0.0)))
-            .withColumn("_rep_details",
-                        F.coalesce("_rep_details", _empty_details)))
+    Output: (partition_key string, dimension string, score double,
+             rating int, docs_scanned long, docs_dropped long,
+             scrub_edit_count long, explanation string,
+             details map<string,string>)
+
+    ``details`` completes the reference's (score, explanation, details)
+    3-tuple contract (rating.py:35-39): per-column missing counts for
+    completeness (quality_checks.py:215-242), per-rule flagged counts
+    for accuracy, per-class proportions for representativity
+    (uc4_tabular_quality_checks.py:193-291), and the raw counters
+    behind each ratio score.
+    """
+    n = F.col("docs_scanned")
+    # representativity (A3, total deviation) folded over the
+    # class-sorted array: a fixed summation order, so the score is
+    # bit-identical under any partitioning of the verdicts. k<=1 → 0.0
+    # (reference parity, quality_checks.py:25-29: a single class is
+    # maximally unrepresentative); a group whose lang_pred is ALL null
+    # has no classes — score 0.0, empty details.
+    classes, k, total = F.col("_classes"), F.size("_classes"), F.col("_total")
+    total_dev = F.aggregate(
+        classes, F.lit(0.0),
+        lambda acc, c: acc + F.abs(c["n"] / total - 1.0 / k))
+    rep = F.coalesce(
+        F.when(k <= 1, F.lit(0.0))
+        .otherwise(F.lit(1.0) - total_dev / (2.0 * (1.0 - 1.0 / k))),
+        F.lit(0.0))
+    rep_details = F.coalesce(
+        F.map_from_entries(F.transform(classes, lambda c: F.struct(
+            c["cls"].alias("key"),
+            F.round(c["n"] / total, 6).cast("string").alias("value")))),
+        _empty_details())
+    wide = (summary
+            .withColumn("_total", F.aggregate(
+                classes, F.lit(0).cast("long"),
+                lambda acc, c: acc + c["n"]))
+            .select(
+                "*",
+                (F.col("_n_present_cells") / (n * len(_META_COLS)))
+                .alias("completeness"),
+                (F.col("_n_in_range") / n).alias("accuracy"),
+                (F.col("_n_coherent") / n).alias("coherence"),
+                (F.lit(1.0) - F.col("_drop_exact_dup") / n)
+                .alias("semantic_coherence"),
+                (F.col("_n_distinct_urls") / n)
+                .alias("relational_consistency"),
+                rep.alias("population_representativity"),
+                (F.col("_n_meta_ok") / n).alias("metadata_granularity"),
+                rep_details.alias("_rep_details")))
 
     def _m(*pairs) -> F.Column:
         kv = []
-        for k, v in pairs:
-            kv += [F.lit(k), v.cast("string")]
+        for key, v in pairs:
+            kv += [F.lit(key), v.cast("string")]
         return F.create_map(*kv)
 
     detail_exprs = {
         "completeness": _m(*[(f"missing_{c}", F.col(f"_missing_{c}"))
                              for c in _META_COLS]),
-        "accuracy": _m(*[(f"flagged_{r}", F.col(f"_flag_{r}"))
+        "accuracy": _m(*[(f"flagged_{r}", F.col(f"_drop_{r}"))
                          for r in _RANGE_RULES]),
         "coherence": _m(("bad_decode", F.col("_n_bad_decode"))),
         "semantic_coherence": _m(("exact_dup_docs",
-                                  F.col("_n_exact_dup"))),
+                                  F.col("_drop_exact_dup"))),
         "relational_consistency": _m(("distinct_urls",
                                       F.col("_n_distinct_urls"))),
         "population_representativity": F.col("_rep_details"),
         "metadata_granularity": _m(("meta_complete_docs",
                                     F.col("_n_meta_ok"))),
     }
-    empty_map = F.map_from_entries(
-        F.array().cast("array<struct<key:string,value:string>>"))
 
     # ONE wide row per group → explode into the long format. (A union
     # of per-dimension selects re-aggregates the verdicts frame once
@@ -194,7 +200,7 @@ def dimension_metrics(verdicts: DataFrame,
             F.col(dim).cast("double").alias("score"),
             bucket_rating(F.col(dim)).alias("rating"),
             expl.alias("explanation"),
-            detail_exprs.get(dim, empty_map).alias("details"))
+            detail_exprs.get(dim, _empty_details()).alias("details"))
 
     n_dims = len(DIMENSIONS)
     overall_score = sum(F.col(d).cast("double")
@@ -208,7 +214,7 @@ def dimension_metrics(verdicts: DataFrame,
         overall_rating.alias("rating"),
         F.lit(f"overall: mean of {n_dims} dimension ratings")
         .alias("explanation"),
-        empty_map.alias("details"))
+        _empty_details().alias("details"))
 
     entries = F.array(*[_entry(d) for d in DIMENSIONS], overall)
     return (wide.select("partition_key", "docs_scanned", "docs_dropped",
@@ -222,24 +228,33 @@ def dimension_metrics(verdicts: DataFrame,
                     F.col("e.details").alias("details")))
 
 
-def dropped_by_rule(verdicts: DataFrame,
-                    group_col: str = "warc_date") -> DataFrame:
-    """(partition_key, rule, n_dropped) — per-rule drop counts."""
-    return (verdicts
-            .select(F.col(group_col).cast("string").alias("partition_key"),
-                    F.explode("drop_reasons").alias("rule"))
-            .groupBy("partition_key", "rule")
-            .agg(F.count("*").alias("n_dropped")))
+def dimension_metrics(verdicts: DataFrame,
+                      group_col: str = "warc_date") -> DataFrame:
+    """Long-format metrics straight from a verdicts frame — see
+    ``metrics_from_summary`` for the output contract."""
+    return metrics_from_summary(day_summary(verdicts, group_col))
 
 
-def lineage_rows(verdicts: DataFrame, run_id: str, stage: str,
-                 group_col: str = "warc_date") -> DataFrame:
-    """Per-partition lineage bookkeeping for checkpoint/resume."""
-    return (verdicts.groupBy(
-        F.col(group_col).cast("string").alias("partition_key"))
-        .agg(F.count("*").alias("rows_in"),
-             F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("rows_out"))
-        .select(F.lit(run_id).alias("run_id"), F.lit(stage).alias("stage"),
-                "partition_key", F.lit("done").alias("status"),
-                "rows_in", "rows_out",
-                F.current_timestamp().alias("finished_ts")))
+def dropped_by_rule(summary: DataFrame) -> DataFrame:
+    """(partition_key, rule, n_dropped) — per-rule drop counts from
+    ``day_summary``; rules that dropped nothing in a group have no
+    row. (A rule appears at most once per doc's drop_reasons, so the
+    per-doc flag sums equal the exploded-reason counts.)"""
+    rules = F.array(*[F.struct(F.lit(r).alias("rule"),
+                               F.col(f"_drop_{r}").alias("n_dropped"))
+                      for r in RULE_ORDER])
+    return (summary.select("partition_key", F.explode(rules).alias("e"))
+            .select("partition_key", "e.rule", "e.n_dropped")
+            .filter(F.col("n_dropped") > 0))
+
+
+def lineage_rows(summary: DataFrame, run_id: str,
+                 stage: str) -> DataFrame:
+    """Per-partition lineage bookkeeping for checkpoint/resume, from
+    ``day_summary``."""
+    return summary.select(
+        F.lit(run_id).alias("run_id"), F.lit(stage).alias("stage"),
+        "partition_key", F.lit("done").alias("status"),
+        F.col("docs_scanned").alias("rows_in"),
+        F.col("docs_kept").alias("rows_out"),
+        F.current_timestamp().alias("finished_ts"))

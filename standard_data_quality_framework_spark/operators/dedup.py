@@ -518,6 +518,30 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     return labels
 
 
+def cluster_labels(all_ids: DataFrame, edges: DataFrame) -> DataFrame:
+    """(id, label) for EVERY id in ``all_ids`` (column ``id``): label =
+    the min id reachable through ``edges`` (id_a/id_b), so a singleton
+    keeps label = id via the left join.
+
+    The edge frame is materialized ONCE: it feeds both the incident-
+    node derivation and the propagation loop's symmetric edge list,
+    and without the barrier each consumer replays the whole
+    pair-generation plan (shingle → MinHash → band join → verify for
+    the near-dup edges). Components run over edge-incident nodes only
+    — the duplicate subgraph, small — so at 10^12 docs the iterative
+    frame is bounded by the dup subgraph, not the whole corpus. (The
+    checkpoint blocks are reclaimed by the ContextCleaner once the
+    labels are unreferenced; Dataset.unpersist would be a no-op.)
+    """
+    edges = edges.select("id_a", "id_b").localCheckpoint()
+    incident = (edges.select(F.col("id_a").alias("id"))
+                .unionByName(edges.select(F.col("id_b").alias("id")))
+                .distinct())
+    labels = connected_components(incident, edges)
+    return (all_ids.join(labels, "id", "left")
+            .select("id", F.coalesce("label", "id").alias("label")))
+
+
 # ---------------------------------------------------------------------------
 # Embedding cosine near-dup
 # ---------------------------------------------------------------------------
@@ -761,7 +785,7 @@ def template_clusters(df: DataFrame, id_col: str, text_col: str,
     ~5·10^11 join rows, while true template pages share MANY
     fingerprints and stay connected through the sub-cap ones. The CC
     pass runs over edge-incident nodes only (the template subgraph),
-    mirroring runner._labels_for.
+    via ``cluster_labels``.
     """
     from .textstats import winnowing_fingerprints
     fps = winnowing_fingerprints(df, id_col, text_col, k=k, w=w)
@@ -775,24 +799,15 @@ def template_clusters(df: DataFrame, id_col: str, text_col: str,
     else:
         fps = fps.repartition("fp")
     a, b = fps.alias("a"), fps.alias("b")
-    # edges feed TWO consumers (incident-node derivation and the CC
-    # propagation loop): materialize the join once — without this the
-    # fp self-join executes twice
     edges = (a.join(b, (F.col("a.fp") == F.col("b.fp"))
                     & (F.col("a.id") < F.col("b.id")))
              .groupBy(F.col("a.id").alias("id_a"),
                       F.col("b.id").alias("id_b"))
              .agg(F.count("*").alias("shared_fps"))
-             .filter(F.col("shared_fps") >= min_shared)
-             .select("id_a", "id_b")
-             .localCheckpoint())
-    incident = (edges.select(F.col("id_a").alias("id"))
-                .unionByName(edges.select(F.col("id_b").alias("id")))
-                .distinct())
-    labels = connected_components(incident, edges)
+             .filter(F.col("shared_fps") >= min_shared))
     all_ids = df.select(F.col(id_col).alias("id")).distinct()
-    lab = (all_ids.join(labels, "id", "left")
-           .select("id", F.coalesce("label", "id").alias("cluster_id")))
+    lab = cluster_labels(all_ids, edges).withColumnRenamed(
+        "label", "cluster_id")
     csize = (lab.groupBy("cluster_id")
              .agg(F.count("*").alias("cluster_size")))
     return lab.join(csize, "cluster_id").select(

@@ -325,6 +325,15 @@ def identical_columns_positional(df: DataFrame, cols: list[str],
     return _fingerprint_pairs(df.agg(*aggs), cols)
 
 
+def columns_presence(columns: list[str],
+                     expected: list[str]) -> tuple[float, list[str]]:
+    """(score, missing) of ``expected_columns_presence`` from a column
+    list — no Spark job."""
+    have = set(columns)
+    missing = [c for c in expected if c not in have]
+    return round((len(expected) - len(missing)) / len(expected), 6), missing
+
+
 def expected_columns_presence(df: DataFrame,
                               expected: list[str]) -> DataFrame:
     """Schema-presence check: expected columns found / expected.
@@ -334,13 +343,12 @@ def expected_columns_presence(df: DataFrame,
     Resolved at plan time from the DataFrame schema (no data pass).
     Output: one row (score, n_expected, n_present, missing_cols).
     """
-    have = set(df.columns)
-    present = [c for c in expected if c in have]
-    missing = [c for c in expected if c not in have]
+    _, missing = columns_presence(df.columns, expected)
+    n_present = len(expected) - len(missing)
     return df.sparkSession.range(1).select(
-        F.round(F.lit(len(present) / len(expected)), 6).alias("score"),
+        F.round(F.lit(n_present / len(expected)), 6).alias("score"),
         F.lit(len(expected)).alias("n_expected"),
-        F.lit(len(present)).alias("n_present"),
+        F.lit(n_present).alias("n_present"),
         F.lit(",".join(missing)).alias("missing_cols"))
 
 

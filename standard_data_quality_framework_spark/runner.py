@@ -8,15 +8,26 @@ One "run" = quality-filter the pages table into the warehouse:
     dropped_by_rule  (partitioned by stage × partition_key) — dynamic overwrite
     lineage          (append, one row per warc_date; commit LAST)
 
+How the sinks are fed: the verdict frame is persisted once and the
+kept-pages write reads it directly; one small per-day summary
+aggregate over the persisted verdicts (metrics.day_summary, persisted
+too) feeds metrics, dropped_by_rule and lineage. The run-level
+counters ride the first verdict action via observe(), the pending
+dates and the undated-page count come from one job before the
+pipeline starts, and schema presence is read off the input's column
+list — no Spark job recomputes a frame another one already built.
+
 Resume contract: lineage is committed only after the data/metrics
 writes for the covered partitions succeed, and EVERY data/metrics
 write is an idempotent per-partition overwrite — a replayed partition
 replaces its own previous rows instead of appending next to them, so
 a crash after the metrics write but before the lineage commit cannot
-double-count. On restart we anti-join the input's warc_dates against
-completed lineage rows for this stage and re-process only the
-remainder. (Duplicate 'done' lineage rows from a crash mid-append are
-harmless: pending_dates reads the distinct partition_key set.)
+double-count. On restart we subtract the dates of completed lineage
+rows for this stage from the input's warc_dates and re-process only
+the remainder. (Duplicate 'done' lineage rows from a crash mid-append
+are harmless: pending_dates reads the set of partition_keys.) Pages
+with a NULL warc_ts have no date partition: they are never pending,
+and every run reports them as ``rows_undated``.
 """
 
 from __future__ import annotations
@@ -24,10 +35,11 @@ from __future__ import annotations
 import hashlib
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .metrics import dimension_metrics, dropped_by_rule, lineage_rows
+from .metrics import (day_summary, dropped_by_rule, lineage_rows,
+                      metrics_from_summary)
 from .pipeline import run_quality_filter, with_partition_cols
 from .sources.catalog import ParquetCatalog
 
@@ -36,17 +48,30 @@ GLOBAL_DEDUP_STAGE = "global_dedup"
 
 
 def pending_dates(catalog: ParquetCatalog, pages: DataFrame) -> DataFrame:
-    """Distinct input warc_dates minus already-completed lineage rows."""
-    all_dates = (with_partition_cols(pages.select("warc_ts", "url"))
-                 .select("warc_date").distinct())
-    if not catalog.exists("lineage"):
-        return all_dates
-    done = (catalog.read("lineage")
-            .filter((F.col("stage") == STAGE)
-                    & (F.col("status") == "done"))
-            .select(F.col("partition_key").cast("date").alias("warc_date"))
-            .distinct())
-    return all_dates.join(done, "warc_date", "left_anti")
+    """ONE row: ``dates`` — the sorted distinct non-NULL input
+    warc_dates minus the dates with a done lineage row for this
+    stage — and ``rows_undated``, the number of pages whose warc_ts is
+    NULL.
+
+    Both come from one global aggregate over the input, so a single
+    job answers both (the done dates, a few rows per crawl day, are
+    read here first and enter the plan as literals). The NULL date is
+    never pending: its pages match no date partition, and listing it
+    would re-run the pipeline on every resume."""
+    # collect_set skips NULL; its map-side partial aggregate keeps one
+    # small date set per input partition
+    dates = F.collect_set(F.to_date("warc_ts"))
+    if catalog.exists("lineage"):
+        done = {r[0] for r in catalog.read("lineage")
+                .filter((F.col("stage") == STAGE)
+                        & (F.col("status") == "done"))
+                .select(F.col("partition_key").cast("date")).collect()}
+        if done:
+            dates = F.array_except(
+                dates, F.array(*[F.lit(d) for d in sorted(done)]))
+    return pages.agg(
+        F.array_sort(dates).alias("dates"),
+        F.count_if(F.col("warc_ts").isNull()).alias("rows_undated"))
 
 
 def run(spark: SparkSession, pages: DataFrame, warehouse: str,
@@ -56,40 +81,41 @@ def run(spark: SparkSession, pages: DataFrame, warehouse: str,
     catalog = ParquetCatalog(spark, warehouse)
 
     # scored schema-presence check against the use-case contract
-    # (config.EXPECTED_PAGE_COLUMNS) — plan-time, no data pass
+    # (config.EXPECTED_PAGE_COLUMNS) — read off the column list, no job
     from .config import EXPECTED_PAGE_COLUMNS
-    from .operators.quality import expected_columns_presence
-    schema_row = expected_columns_presence(
-        pages, EXPECTED_PAGE_COLUMNS).first()
-    if schema_row.score < 1.0:
+    from .operators.quality import columns_presence
+    presence, missing = columns_presence(pages.columns,
+                                         EXPECTED_PAGE_COLUMNS)
+    if presence < 1.0:
         raise ValueError(
-            f"input is missing expected columns: {schema_row.missing_cols} "
-            f"(schema presence {schema_row.score})")
+            f"input is missing expected columns: {','.join(missing)} "
+            f"(schema presence {presence})")
 
-    todo = pending_dates(catalog, pages)
-    n_dates = todo.count()
-    if n_dates == 0:
+    todo = pending_dates(catalog, pages).first()
+    dates, n_undated = list(todo.dates), int(todo.rows_undated)
+    if not dates:
         return {"run_id": run_id, "dates_processed": 0, "resumed": True,
-                "schema_presence": float(schema_row.score)}
+                "rows_undated": n_undated, "schema_presence": presence}
 
-    # restrict input to pending partitions (broadcast the small date set
-    # — partition pruning at the scan on a real Iceberg table)
+    # restrict input to pending partitions with the collected date
+    # literals (partition pruning at the scan on a real Iceberg table)
     pages_todo = (with_partition_cols(pages)
-                  .join(F.broadcast(todo), "warc_date", "left_semi")
+                  .filter(F.col("warc_date").isin(dates))
                   .drop("warc_date", "url_bucket"))
 
     out = run_quality_filter(spark, pages_todo)
     # cheap run-level counters ride along with the first action via
     # observe() (A19 summary-stats pattern — no extra pass)
-    from pyspark.sql import Observation
     obs = Observation(f"qf_{run_id}")
     observed = out.verdicts.observe(
         obs,
         F.count(F.lit(1)).alias("docs_scanned"),
         F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("docs_kept"),
         F.sum(F.col("scrub_edits").cast("long")).alias("scrub_edits"))
-    # one materialization of the verdict frame feeds all four sinks
+    # one materialization of the verdict frame feeds the kept sink and
+    # the per-day summary; the summary feeds the other three sinks
     verdicts = observed.persist()
+    summary = None
     try:
         kept = (verdicts.filter(F.col("keep"))
                 .select("url", "warc_ts",
@@ -98,32 +124,32 @@ def run(spark: SparkSession, pages: DataFrame, warehouse: str,
                         "warc_date", "url_bucket"))
         catalog.overwrite_partitions(kept, "pages_filtered", ["warc_date"])
 
+        summary = day_summary(verdicts).persist()
         # per-partition overwrite (NOT append): a replay of a partition
         # whose lineage never committed replaces its own rows — resume
         # cannot double-count metrics
-        mets = dimension_metrics(verdicts).withColumn(
+        mets = metrics_from_summary(summary).withColumn(
             "run_id", F.lit(run_id)).withColumn("stage", F.lit(STAGE))
         catalog.overwrite_partitions(mets, "metrics",
                                      ["stage", "partition_key"])
 
-        dbr = dropped_by_rule(verdicts).withColumn(
+        dbr = dropped_by_rule(summary).withColumn(
             "run_id", F.lit(run_id)).withColumn("stage", F.lit(STAGE))
         catalog.overwrite_partitions(dbr, "dropped_by_rule",
                                      ["stage", "partition_key"])
 
         # lineage commit LAST — the resume barrier
-        lin = lineage_rows(verdicts, run_id, STAGE)
-        catalog.append(lin, "lineage")
-
-        n_in = verdicts.count()
-        n_kept = kept.count()
+        catalog.append(lineage_rows(summary, run_id, STAGE), "lineage")
         counters = dict(obs.get)
     finally:
+        if summary is not None:
+            summary.unpersist()
         verdicts.unpersist()
-    return {"run_id": run_id, "dates_processed": n_dates,
-            "rows_in": n_in, "rows_kept": n_kept, "resumed": False,
-            "observed": counters,
-            "schema_presence": float(schema_row.score)}
+    return {"run_id": run_id, "dates_processed": len(dates),
+            "rows_in": int(counters["docs_scanned"]),
+            "rows_kept": int(counters["docs_kept"] or 0),
+            "rows_undated": n_undated, "resumed": False,
+            "observed": counters, "schema_presence": presence}
 
 
 def _neardup_edges(docs: DataFrame, n: int, num_hashes: int, bands: int,
@@ -150,23 +176,12 @@ def _neardup_edges(docs: DataFrame, n: int, num_hashes: int, bands: int,
     return lsh.unionByName(exact).distinct()
 
 
-def _labels_for(all_ids: DataFrame, edges: DataFrame) -> DataFrame:
-    """(id, label) for EVERY id in all_ids: connected components run
-    over edge-incident nodes only (the duplicate subgraph — small),
-    singletons keep label = id via the left join. At 10^12 docs this
-    bounds the iterative CC frame to the dup subgraph instead of the
-    whole corpus."""
-    from .operators.dedup import connected_components
-    incident = (edges.select(F.col("id_a").alias("id"))
-                .unionByName(edges.select(F.col("id_b").alias("id")))
-                .distinct())
-    labels = connected_components(incident, edges)
-    # NOTE: labels is localCheckpoint'ed (RDD-level persistence);
-    # Dataset.unpersist would be a no-op. The checkpoint blocks are
-    # reclaimed by the ContextCleaner once the frame is unreferenced
-    # after the dup_clusters write.
-    return (all_ids.join(labels, "id", "left")
-            .select("id", F.coalesce("label", "id").alias("label")))
+def _literal_row(spark: SparkSession, cols: list[tuple]) -> DataFrame:
+    """One-row frame of typed literals, from (name, type, value)
+    triples — built natively: createDataFrame(list) ships the row
+    through a PythonRDD and starts Python workers for it."""
+    return spark.range(1).select(*[F.lit(v).cast(t).alias(name)
+                                   for name, t, v in cols])
 
 
 def run_global_dedup(spark: SparkSession, warehouse: str,
@@ -238,16 +253,13 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
                   pages.select("warc_date").distinct().collect())
     snap = hashlib.md5(",".join(days).encode()).hexdigest()[:16]
 
-    def _lineage_done(key: str) -> bool:
-        if not catalog.exists("lineage"):
-            return False
-        return (catalog.read("lineage")
-                .filter((F.col("stage") == GLOBAL_DEDUP_STAGE)
-                        & (F.col("status") == "done")
-                        & (F.col("partition_key") == key))
-                .count()) > 0
-
-    if _lineage_done(snap):
+    done_keys = set()
+    if catalog.exists("lineage"):
+        done_keys = {r[0] for r in catalog.read("lineage")
+                     .filter((F.col("stage") == GLOBAL_DEDUP_STAGE)
+                             & (F.col("status") == "done"))
+                     .select("partition_key").collect()}
+    if snap in done_keys:
         return {"run_id": run_id, "snapshot": snap, "resumed": True}
 
     docs = pages.select(F.col("url").alias("id"), "text", "warc_date")
@@ -259,9 +271,6 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
     mode = "full"
     prior = None
     prior_depth = 0
-    st = None
-    if catalog.exists("dedup_state"):
-        st = catalog.read("dedup_state").first()
     if incremental and catalog.exists("dup_clusters"):
         prior = catalog.read("dup_clusters")
         prior_days = sorted(str(r[0]) for r in
@@ -273,15 +282,18 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
         # stale marker — dup_clusters wiped/rebuilt out-of-band, or
         # state left by an aborted sequence — would force or defer full
         # rebuilds at the wrong cadence. Mismatch ⇒ treat depth as 0.
+        st = (catalog.read("dedup_state").first()
+              if catalog.exists("dedup_state") else None)
         if st is not None and str(st.snapshot) == prior_snap:
             prior_depth = int(st.chain_depth)
         if (prior_days and set(prior_days) < set(days)
-                and _lineage_done(prior_snap)
+                and prior_snap in done_keys
                 and (full_rebuild_every is None
                      or prior_depth + 1 < full_rebuild_every)):
             mode = "delta"
             new_days = sorted(set(days) - set(prior_days))
 
+    lsh_docs = None
     if mode == "delta":
         canon_ids = (prior.filter(F.col("is_canonical"))
                      .select(F.col("url").alias("id")).distinct())
@@ -315,11 +327,11 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
                       .distinct())
         edges = new_edges.unionByName(prior_star).distinct()
     else:
-        lsh_docs = all_ids.count()
         edges = _neardup_edges(docs, n, num_hashes, bands,
                                threshold, max_bucket_size)
 
-    labels = _labels_for(all_ids, edges)
+    from .operators import dedup
+    labels = dedup.cluster_labels(all_ids, edges)
     csize = labels.groupBy("label").agg(F.count("*").alias("cluster_size"))
     clusters = (docs.select("id", "warc_date")
                 .join(labels, "id")
@@ -330,31 +342,47 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
                         .alias("is_canonical"),
                         "cluster_size"))
     # full overwrite, THEN the lineage commit — same barrier as run().
-    # dup_clusters is also the delta baseline for the NEXT ingest, so
-    # stage through a temp dir: overwriting the parquet dir we are
-    # reading (delta mode) would corrupt the self-read.
-    # no leading underscore — Spark treats _-prefixed paths as hidden
-    tmp = catalog.path(f"dup_clusters.stage.{run_id}")
-    clusters.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite") \
-        .parquet(catalog.path("dup_clusters"))
-    import shutil
-    shutil.rmtree(tmp, ignore_errors=True)
+    # dup_clusters is also the delta baseline for the NEXT ingest: in
+    # delta mode the plan reads it, so stage through a temp dir —
+    # overwriting the parquet dir we are reading would corrupt the
+    # self-read. A full rebuild reads only pages_filtered and writes
+    # in place.
+    target = catalog.path("dup_clusters")
+    if mode == "delta":
+        import shutil
+        # no leading underscore — Spark treats _-prefixed paths as hidden
+        tmp = catalog.path(f"dup_clusters.stage.{run_id}")
+        clusters.write.mode("overwrite").parquet(tmp)
+        spark.read.parquet(tmp).write.mode("overwrite").parquet(target)
+        shutil.rmtree(tmp, ignore_errors=True)
+    else:
+        clusters.write.mode("overwrite").parquet(target)
 
-    out = catalog.read("dup_clusters")
-    n_rows = out.count()
-    n_clusters = out.select("cluster_id").distinct().count()
-    lin = spark.createDataFrame(
-        [(run_id, GLOBAL_DEDUP_STAGE, snap, "done", n_rows, n_clusters)],
-        "run_id string, stage string, partition_key string, "
-        "status string, rows_in long, rows_out long") \
-        .withColumn("finished_ts", F.current_timestamp())
-    catalog.append(lin, "lineage")
+    # the closing counts in ONE aggregate; in full mode every distinct
+    # url went through LSH, so lsh_docs is the distinct-url count
+    tot = catalog.read("dup_clusters").agg(
+        F.count("*").alias("rows"),
+        F.count_distinct("cluster_id").alias("clusters"),
+        F.count_if(~F.col("is_canonical")).alias("dup_rows"),
+        F.count_distinct("url").alias("urls")).first()
+    n_rows, n_clusters = int(tot.rows), int(tot.clusters)
+    if lsh_docs is None:
+        lsh_docs = int(tot.urls)
+    catalog.append(_literal_row(spark, [
+        ("run_id", "string", run_id),
+        ("stage", "string", GLOBAL_DEDUP_STAGE),
+        ("partition_key", "string", snap),
+        ("status", "string", "done"),
+        ("rows_in", "long", n_rows),
+        ("rows_out", "long", n_clusters)])
+        .withColumn("finished_ts", F.current_timestamp()), "lineage")
     # delta-chain depth marker for full_rebuild_every (one tiny row)
     depth = 0 if mode == "full" else prior_depth + 1
-    spark.createDataFrame(
-        [(snap, mode, depth, run_id)],
-        "snapshot string, mode string, chain_depth int, run_id string") \
+    _literal_row(spark, [
+        ("snapshot", "string", snap),
+        ("mode", "string", mode),
+        ("chain_depth", "int", depth),
+        ("run_id", "string", run_id)]) \
         .write.mode("overwrite").parquet(catalog.path("dedup_state"))
     return {"run_id": run_id, "snapshot": snap, "resumed": False,
             # 'delta-approx', not 'delta': labels can diverge from a
@@ -362,4 +390,4 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
             "mode": "delta-approx" if mode == "delta" else mode,
             "delta_depth": depth, "lsh_docs": lsh_docs,
             "rows": n_rows, "clusters": n_clusters,
-            "dup_rows": n_rows - out.filter("is_canonical").count()}
+            "dup_rows": int(tot.dup_rows)}

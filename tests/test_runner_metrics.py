@@ -116,6 +116,110 @@ def test_global_dedup_cross_day_clusters_and_resume(spark, pages_df,
     assert c2.filter(~F.col("is_canonical")).count() >= 5
 
 
+def test_undated_pages_reported_and_resume_finishes(spark, pages_df,
+                                                     tmp_path):
+    # a page with a NULL warc_ts has no date partition: it is reported
+    # as rows_undated and its NULL date is never pending — a pending
+    # NULL date matches no page, so the page would be lost unreported
+    # and every resume would re-run
+    two = pages_df.orderBy("url").limit(2)
+    first_url = two.first().url
+    pages = two.withColumn(
+        "warc_ts", F.when(F.col("url") == first_url, F.col("warc_ts")))
+    wh = str(tmp_path / "whu")
+    r1 = run(spark, pages, wh, run_id="u1")
+    assert (r1["dates_processed"], r1["rows_in"], r1["rows_undated"]) \
+        == (1, 1, 1)
+    r2 = run(spark, pages, wh, run_id="u2")
+    assert r2["resumed"] and r2["dates_processed"] == 0
+    assert r2["rows_undated"] == 1
+    lin = spark.read.parquet(f"{wh}/lineage").toPandas()
+    assert lin["rows_in"].sum() == 1
+
+
+def test_job_counts_per_operation(spark, pages_df, tmp_path):
+    # These bounds pin "each frame is computed once": with every
+    # warehouse frame computed once this fixture takes 15 / 4 / 25
+    # jobs (run / resume / global dedup); recomputing any frame — the
+    # pending dates, the near-dup edges, the metrics aggregates — adds
+    # jobs and fails here.
+    sc = spark.sparkContext
+    wh = str(tmp_path / "whj")
+    ops = {"run": lambda: run(spark, pages_df, wh, run_id="j1"),
+           "resume": lambda: run(spark, pages_df, wh, run_id="j2"),
+           "dedup": lambda: run_global_dedup(spark, wh, run_id="j3")}
+    bounds = {"run": 17, "resume": 4, "dedup": 28}
+    jobs = {}
+    try:
+        for name, op in ops.items():
+            group = f"job_count_{name}"
+            sc.setJobGroup(group, name)
+            op()
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert all(jobs[k] <= bounds[k] for k in bounds), (jobs, bounds)
+
+
+def test_metrics_partition_invariant(spark, pages_df):
+    # bit-identical metrics under any partitioning of the verdicts:
+    # every score is counts divided after the aggregation, and
+    # representativity sums its class deviations in class order
+    verdicts = run_quality_filter(spark, pages_df).verdicts.persist()
+    try:
+        runs = [sorted(dimension_metrics(verdicts.repartition(n))
+                       .collect())
+                for n in (1, 3, 8)]
+    finally:
+        verdicts.unpersist()
+    assert runs[0] == runs[1] == runs[2]
+
+
+def test_make_udfs_once_per_context():
+    # the models are trained and broadcast once per SparkContext; a
+    # stopped context's broadcasts are dead, so a new context must get
+    # new ones. Own process: stopping the shared test session is not
+    # an option.
+    probe = """
+from pyspark.broadcast import Broadcast
+from pyspark.sql import functions as F
+from standard_data_quality_framework_spark.functions.udfs import make_udfs
+from standard_data_quality_framework_spark.session import get_spark
+
+def broadcasts(udfs):
+    cells = udfs["process_page"].func.__closure__
+    return [c.cell_contents for c in cells
+            if isinstance(c.cell_contents, Broadcast)]
+
+spark = get_spark("udf_memo", cores=1, shuffle_partitions=1)
+a, b = make_udfs(spark), make_udfs(spark)
+first = broadcasts(a)
+assert len(first) == 2 and broadcasts(b) == first
+assert a["process_page"] is b["process_page"]
+spark.stop()
+spark = get_spark("udf_memo", cores=1, shuffle_partitions=1)
+c = make_udfs(spark)
+assert c["process_page"] is not a["process_page"]
+assert not any(x is y for x in broadcasts(c) for y in first)
+row = spark.range(1).select(c["process_page"](
+    F.lit("hello world").cast("binary"), F.lit(False)).alias("p")).first()
+assert row.p.etext is None and row.p.lang_pred
+spark.stop()
+print("udf-memo-ok")
+"""
+    import os
+    import subprocess
+    import sys
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo, SDQF_DRIVER_MEM="1g")
+    out = subprocess.run([sys.executable, "-c", probe], env=env, cwd=repo,
+                         capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "udf-memo-ok" in out.stdout
+
+
 def test_metrics_dimensions_and_ratings(spark, pages_df):
     out = run_quality_filter(spark, pages_df)
     verdicts = out.verdicts.withColumn("warc_date", F.to_date("warc_ts"))
