@@ -6,9 +6,10 @@ Spark (``conv(substring(md5(s),1,15),16,10)``) and DuckDB
 (``('0x' || substr(md5(s),1,15))::BIGINT``) compute identically, so
 every operator has an exact SQL oracle.
 
-At production scale you'd flip HASH_IMPL to xxhash64 (Spark-native,
-~5× faster, no hex round-trip) — the operators take the hash
-expression as an injectable, and correctness tests pin the md5 path.
+``hash60`` is hard-wired into every operator that hashes, and the
+DuckDB oracles pin it: swapping in a cheaper hash (xxhash64 is
+Spark-native, ~5× faster, no hex round-trip) changes every such
+operator's output and its oracle SQL together.
 
 MinHash/SimHash constants are derived from md5 of fixed strings (no
 RNG): reproducible everywhere, embeddable as literals in oracle SQL.

@@ -1,17 +1,11 @@
-"""Vectorized pandas/Arrow UDFs — the ONLY Python that runs on executors.
+"""The pipeline's one Python UDF — the only Python that runs on executors.
 
-The pipeline's hot path has exactly ONE Python stage,
-``process_page(payload, is_html) -> struct``: extract + langid +
+``process_page(payload, is_html) -> struct`` does extract + langid +
 perplexity + repetition + scrub in one Arrow round trip per batch
 (pipeline.run_quality_filter; everything else is native Catalyst
-expressions). The staged trio below computes the same values one
-step at a time and backs the per-stage pipeline helpers and their
-parity tests, not the hot path:
-
-  * ``extract_text(html: binary) -> string``   (byte-identical contract)
-  * ``model_signals(text) -> struct``          (langid + perplexity +
-    repetition signals)
-  * ``scrub(text) -> struct<scrubbed, edits>`` (byte-identical contract)
+expressions). Arrow batches cross the JVM↔Python boundary vectorized,
+but inside each batch the kernel loops over the documents one at a
+time in Python (textpure + the two models).
 
 Model artifacts (langid log-prob matrix ~1 MB, bigram LM ~1 MB) are
 trained and broadcast once per SparkContext — ``make_udfs`` memoizes
@@ -33,20 +27,6 @@ from ..models.langid import train_langid
 from ..models.perplexity import train_perplexity
 from .textpure import extract_text, repetition_signals, scrub
 
-_MODEL_SIGNALS_SCHEMA = T.StructType([
-    T.StructField("lang_pred", T.StringType()),
-    T.StructField("lang_conf", T.DoubleType()),
-    T.StructField("perplexity", T.DoubleType()),
-    T.StructField("dup_line_frac", T.DoubleType()),
-    T.StructField("top2gram_frac", T.DoubleType()),
-    T.StructField("dup5gram_frac", T.DoubleType()),
-])
-
-_SCRUB_SCHEMA = T.StructType([
-    T.StructField("scrubbed_text", T.StringType()),
-    T.StructField("scrub_edits", T.IntegerType()),
-])
-
 _PROCESS_SCHEMA = T.StructType([
     T.StructField("etext", T.StringType()),
     T.StructField("lang_pred", T.StringType()),
@@ -67,47 +47,15 @@ _UDFS_BY_CONTEXT: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def make_udfs(spark: SparkSession) -> dict:
-    """The UDF set with the models broadcast to executors — built once
-    per SparkContext: later calls on the same context return the same
-    UDFs over the same broadcasts, instead of retraining both models
-    and broadcasting them again."""
+    """``{"process_page": udf}`` with the models broadcast to
+    executors — built once per SparkContext: later calls on the same
+    context return the same UDF over the same broadcasts, instead of
+    retraining both models and broadcasting them again."""
     sc = spark.sparkContext
     if sc in _UDFS_BY_CONTEXT:
         return dict(_UDFS_BY_CONTEXT[sc])
     b_lid = sc.broadcast(train_langid())
     b_ppl = sc.broadcast(train_perplexity())
-
-    @F.pandas_udf(T.StringType())
-    def extract_text_udf(html: pd.Series) -> pd.Series:
-        return html.map(lambda b: extract_text(b) if b is not None else "")
-
-    @F.pandas_udf(_MODEL_SIGNALS_SCHEMA)
-    def model_signals_udf(text: pd.Series) -> pd.DataFrame:
-        lid = b_lid.value
-        lm = b_ppl.value
-        langs, confs, ppls, d1, d2, d3 = [], [], [], [], [], []
-        for t in text:
-            t = t if isinstance(t, str) else ""
-            lang, conf = lid.predict_one(t)
-            langs.append(lang)
-            confs.append(conf)
-            ppls.append(lm.perplexity(t))
-            a, b, c = repetition_signals(t)
-            d1.append(a)
-            d2.append(b)
-            d3.append(c)
-        return pd.DataFrame({
-            "lang_pred": langs, "lang_conf": confs, "perplexity": ppls,
-            "dup_line_frac": d1, "top2gram_frac": d2, "dup5gram_frac": d3,
-        })
-
-    @F.pandas_udf(_SCRUB_SCHEMA)
-    def scrub_udf(text: pd.Series) -> pd.DataFrame:
-        pairs = [scrub(t if isinstance(t, str) else "") for t in text]
-        return pd.DataFrame({
-            "scrubbed_text": [p[0] for p in pairs],
-            "scrub_edits": pd.array([p[1] for p in pairs], dtype="int32"),
-        })
 
     @F.pandas_udf(_PROCESS_SCHEMA)
     def process_page_udf(payload: pd.Series,
@@ -156,11 +104,6 @@ def make_udfs(spark: SparkSession) -> dict:
         out["scrub_edits"] = out["scrub_edits"].astype("int32")
         return out
 
-    udfs = {
-        "extract_text": extract_text_udf,
-        "model_signals": model_signals_udf,
-        "scrub": scrub_udf,
-        "process_page": process_page_udf,
-    }
+    udfs = {"process_page": process_page_udf}
     _UDFS_BY_CONTEXT[sc] = udfs
     return dict(udfs)

@@ -14,10 +14,10 @@ uniform by construction, no skew. Candidate generation is always
 bounded (LSH bands / df-capped shingles / LSH buckets), never
 all-pairs; exact verification runs on candidates only, via
 ``array_intersect`` over per-doc shingle sets so the shingle frame is
-never self-joined. MinHash signatures are computed per-row with
-array lambdas (``transform`` + ``array_min``) — zero shuffles, no
-(shingle × seed) explode, nothing persisted (no cache leaks across a
-long-lived session).
+never self-joined. MinHash minima are codegen ``min`` aggregates over
+the exploded (id, shingle-hash) rows — one id-keyed exchange, no
+(shingle × seed) cross product, nothing persisted (no cache leaks
+across a long-lived session).
 Recast of the reference's duplicate detection: exact-hash dedup
 (uc1_image_quality_checks.py:589-659 md5-of-bytes), duplicate-row
 ratio (quality_checks.py:245-275), O(k²)→O(k) fingerprinting
@@ -168,46 +168,49 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def _hashed_sets(ss: DataFrame) -> DataFrame:
-    """(id, hset: array<long>) — 31-bit-hashed shingle SET per doc.
+def _minhash_docs(ss: DataFrame, num_hashes: int) -> DataFrame:
+    """(id, hset, mh_0 .. mh_{k-1}) per doc of a shingle-set frame.
 
-    ``array_distinct`` keeps hset a true set: two distinct shingles
-    colliding into one 31-bit value would otherwise make hset a
-    multiset whose size() counts duplicates while array_intersect
-    dedups, skewing the verified Jaccard. Post-distinct the computed
-    score equals the exact string-shingle Jaccard unless a collision
-    merges set elements (~|set|²/2³¹ per doc — negligible), which is
-    the documented hashed-Jaccard approximation."""
-    return ss.select(
-        "id",
-        F.array_distinct(
-            F.transform("shingles",
-                        lambda s: F.pmod(hash60(s), F.lit(MERSENNE31))))
-        .alias("hset"))
+    The shingle hash and all ``num_hashes`` permutation minima are
+    computed on the EXPLODED (id, shingle-hash) rows — top-level
+    codegen expressions and a codegen hash aggregate — not with
+    row-local ``transform``/``array_min`` lambdas, which are
+    CodegenFallback and ran ~num_hashes × |set| interpreted ops per
+    doc (the dominant CPU at sf1.0: 85 s). The id-keyed groupBy both
+    rebuilds the hashed set (``collect_set`` — min per permutation
+    over the multiset equals min over the set; a caller that reads
+    only the minima gets it pruned away) and takes the k mins in one
+    pass. The planted exchange sits on the EXPLODED (id, _h) rows —
+    exactly two columns, so column pruning cannot diverge the
+    subtrees of several consumers and plan reuse materializes the
+    shuffle (and the md5 shingle hashing below it) once; the groupBy
+    adds no further exchange.
 
-
-def _minhash_cols(num_hashes: int) -> list:
-    """k per-row minhash expressions over the `hset` array column."""
-    return [
-        F.array_min(F.transform(
-            F.col("hset"),
-            lambda x: F.pmod(F.lit(a) * x + F.lit(b), F.lit(MERSENNE31))))
-        .alias(f"mh_{i}")
+    ``hset`` is a true set of 31-bit shingle hashes, so a Jaccard over
+    it equals the exact string-shingle Jaccard unless a collision
+    merges set elements (~|set|²/2³¹ per doc — negligible).
+    """
+    # explode_outer + isNotNull — see word_shingles: a plain explode's
+    # inferred size()>0 filter re-runs the interpreted shingle build
+    # serially below the fan-out exchange (measured 52 s vs 2 s)
+    g = (ss.select("id", F.explode_outer("shingles").alias("_s"))
+         .filter(F.col("_s").isNotNull())
+         .select("id", F.pmod(hash60(F.col("_s")),
+                              F.lit(MERSENNE31)).alias("_h"))
+         .repartition(F.col("id")))
+    mins = [
+        F.min(F.pmod(F.lit(a) * F.col("_h") + F.lit(b),
+                     F.lit(MERSENNE31))).alias(f"mh_{i}")
         for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
     ]
+    return g.groupBy("id").agg(F.collect_set("_h").alias("hset"), *mins)
 
 
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
                        n: int = 5, num_hashes: int = 16) -> DataFrame:
-    """(id, seed, minhash) — k permutation-min values per doc.
-
-    Computed entirely row-local: hash the doc's shingle set once, then
-    each permutation is an `array_min(transform(...))` — no explode,
-    no groupBy, zero shuffles (the round-1 design exploded
-    (shingle × seed) through a groupBy-min shuffle; this one ships
-    only k longs per doc and scans the text once)."""
-    hs = _hashed_sets(shingle_sets(df, id_col, text_col, n))
-    sig = hs.select("id", *_minhash_cols(num_hashes))
+    """(id, seed, minhash) — k permutation-min values per doc: the
+    minima of ``_minhash_docs`` exploded to one row per seed."""
+    sig = _minhash_docs(shingle_sets(df, id_col, text_col, n), num_hashes)
     pairs = F.array(*[
         F.struct(F.lit(i).alias("seed"), F.col(f"mh_{i}").alias("minhash"))
         for i in range(num_hashes)])
@@ -227,41 +230,14 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     key, no skew), then exact Jaccard over the full hashed shingle
     sets (array_intersect, candidates only) filters false positives.
 
-    Plan shape (r6 rework, guide §4.1 applied to expression form):
-    the shingle hash and all ``num_hashes`` permutation minima are
-    computed on the EXPLODED (id, shingle-hash) rows — top-level
-    codegen expressions and a codegen hash aggregate — instead of the
-    r5 row-local ``transform``/``array_min`` lambdas, which are
-    CodegenFallback and ran ~num_hashes × |set| interpreted ops per
-    doc (the dominant CPU at sf1.0: 85 s). The id-keyed groupBy both
-    rebuilds the hashed set (``collect_set`` — min per permutation
-    over the multiset equals min over the set) and takes the 16 mins
-    in one pass. The planted exchange sits on the EXPLODED (id, _h)
-    rows — exactly two columns, so column pruning cannot diverge the
-    three consumers' subtrees (banding + both verify sides) and plan
-    reuse materializes the shuffle (and the md5 shingle hashing below
-    it) once; the groupBys above it add no further exchange (the
-    id partitioning already satisfies their distribution), and both
-    verify sides are the identical subplan, deduplicated by stage
-    reuse. Nothing is persisted — no cached partitions accumulate
-    across calls.
+    Plan shape: signatures and hashed sets come from one
+    ``_minhash_docs`` aggregate whose input exchange is shared by the
+    three consumers (banding + both verify sides); both verify sides
+    are the identical subplan, deduplicated by stage reuse. Nothing is
+    persisted — no cached partitions accumulate across calls.
     """
     rows = num_hashes // bands
-    ss = shingle_sets(df, id_col, text_col, n)
-    # explode_outer + isNotNull — see word_shingles: a plain explode's
-    # inferred size()>0 filter re-runs the interpreted shingle build
-    # serially below the fan-out exchange (measured 52 s vs 2 s)
-    g = (ss.select("id", F.explode_outer("shingles").alias("_s"))
-         .filter(F.col("_s").isNotNull())
-         .select("id", F.pmod(hash60(F.col("_s")),
-                              F.lit(MERSENNE31)).alias("_h"))
-         .repartition(F.col("id")))
-    mins = [
-        F.min(F.pmod(F.lit(a) * F.col("_h") + F.lit(b),
-                     F.lit(MERSENNE31))).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
-    ]
-    docs = g.groupBy("id").agg(F.collect_set("_h").alias("hset"), *mins)
+    docs = _minhash_docs(shingle_sets(df, id_col, text_col, n), num_hashes)
     # band signature = md5 of the SORTED "seed:minhash" strings — the
     # same bytes the SQL oracle builds with string_agg(... ORDER BY)
     band_structs = []
@@ -553,8 +529,8 @@ def _bucket_pairs_arrow(bkt: DataFrame, threshold: float) -> DataFrame:
     vectors are handed to a numpy kernel ONCE (applyInPandas — the
     only data crossing Arrow is corpus vectors, never the quadratic
     pair set) and the all-pairs cosine is computed as 64 vectorized
-    block accumulations. BIT-IDENTICAL to the native expression path
-    by construction:
+    block accumulations. BIT-IDENTICAL to the Catalyst expression
+    form (the exact ``n_planes=0`` path below) by construction:
 
       * dot and squared-norm folds run ``acc = acc + term``
         sequentially over dimensions — the exact IEEE operation
@@ -564,8 +540,10 @@ def _bucket_pairs_arrow(bkt: DataFrame, threshold: float) -> DataFrame:
       * rounding replicates Spark's Round(double, 4) exactly:
         BigDecimal.valueOf uses the shortest decimal repr, as does
         Python's ``repr``, so Decimal(repr(x)).quantize(1e-4,
-        HALF_UP) yields the same double (verified by the native≡arrow
-        parity test on 2.6k random vectors).
+        HALF_UP) yields the same double (verified against an
+        in-stream Catalyst reference on 2.6k random vectors:
+        tests/test_operators.py::
+        test_embedding_verify_arrow_native_parity).
 
     The raw-threshold prefilter keeps the per-survivor Decimal cost
     off the full pair set: rounding moves a value by < 5.001e-5, so
@@ -633,8 +611,7 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str, vec_col: str,
                             n_planes: int = 8,
                             dim: int = 64,
                             n_tables: int = 4,
-                            allow_exact: bool = False,
-                            verify_impl: str = "arrow") -> DataFrame:
+                            allow_exact: bool = False) -> DataFrame:
     """(id_a, id_b, cos_sim) for cosine ≥ threshold (rounded to 4 dp
     for cross-engine float stability).
 
@@ -651,26 +628,15 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str, vec_col: str,
     test_embedding_lsh_recall). Precision stays exact — the cosine
     verify filters every false candidate.
 
-    Scale shape (r6 rework — guide §8 "decide with small rows" run in
-    reverse: here the DECISION is cheap and the pair-set is the heavy
-    thing, so verify moves INTO the candidate join): each table's
-    bucket equi-join carries both sides' vectors and precomputed
-    norms, the unrolled codegen cosine (similarity._dot —
-    bit-identical fold order) is evaluated in the same stage, and the
-    threshold filter collapses the stream BEFORE anything is
-    shuffled; the final union ``distinct`` then dedups only the
-    (tiny) surviving pair set. The r5 shape materialized the raw
-    candidate pairs first — measured at sf1.0: 46.6M candidate rows
-    through a distinct exchange plus TWO 46M-row joins to fetch
-    vectors back (sort-merge once the vector frame's double-cast size
-    estimate crossed the broadcast threshold) — 119 s, vs verifying
-    51.8M in-stream (the ~11% cross-table duplicate verifications are
-    three orders of magnitude cheaper than shuffling the pair set).
-    The bucket side is broadcast (vectors + norms, ~11 MB at 20k×64
-    — the deliberate build side, same contract as cosine_topk's
-    broadcast query set); a corpus too big for that broadcast would
-    flip this to per-table shuffle joins on the bucket key, still
-    linear in corpus × n_tables rather than quadratic in candidates.
+    Scale shape: each table's candidates are verified INSIDE their
+    bucket — the (id, vector) rows are grouped by bucket key and
+    ``_bucket_pairs_arrow`` computes and thresholds every in-bucket
+    cosine in one numpy kernel per bucket, so the quadratic candidate
+    set is never materialized or shuffled; the final union
+    ``distinct`` dedups only the (tiny) surviving pair set. (The r5
+    shape materialized the raw candidate pairs first — measured at
+    sf1.0: 46.6M candidate rows through a distinct exchange plus TWO
+    46M-row joins to fetch vectors back — 119 s.)
 
     ``n_planes=0`` degenerates to the exact all-pairs product (every
     vector in bucket 0, single table) — the small-N / oracle path.
@@ -692,47 +658,18 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str, vec_col: str,
     if n_planes > 0:
         from .similarity import lsh_bucket_col
         n_tables = max(1, n_tables)
-        # per-VECTOR norms hoisted out of the pair loop; both norm
-        # and per-pair dot use the fold-lambda form (the unrolled
-        # variants pay ~0.5-1 s codegen+JIT per run and hit a 10×
-        # method-split cliff on two-array terms — similarity._dot)
-        vn = v.withColumn("_n", F.sqrt(_sqnorm(F.col("v"))))
-        buckets = vn.select(
-            "id", "v", "_n",
+        buckets = v.select(
+            "id", "v",
             *[lsh_bucket_col(F.col("v"), n_planes, dim,
                              first_plane=t * n_planes)
               .alias(f"b{t}") for t in range(n_tables)])
-        dot = _dot(F.col("va"), F.col("vb"))
         cand = None
         for t in range(n_tables):
-            if verify_impl == "arrow":
-                # per-bucket numpy kernel: only corpus vectors cross
-                # Arrow, the quadratic pair set never leaves the task
-                p = _bucket_pairs_arrow(
-                    buckets.select("id", "v",
-                                   F.col(f"b{t}").alias("_bk")),
-                    threshold)
-                cand = p if cand is None else cand.unionByName(p)
-                continue
-            a = buckets.select(F.col("id").alias("id_a"),
-                               F.col("v").alias("va"),
-                               F.col("_n").alias("_na"),
-                               F.col(f"b{t}").alias("_bk"))
-            b = buckets.select(F.col("id").alias("id_b"),
-                               F.col("v").alias("vb"),
-                               F.col("_n").alias("_nb"),
-                               F.col(f"b{t}").alias("_bk"))
-            # broadcast the build side: a 2^n_planes-key bucket join
-            # would otherwise SHUFFLE both sides onto ≤ 2^n_planes
-            # reducer keys (16 keys over 32 cores — guaranteed idle
-            # cores + skew); the broadcast probe keeps candidate
-            # generation + in-stream verify at full scan parallelism
-            p = (a.join(F.broadcast(b), "_bk")
-                 .filter(F.col("id_a") < F.col("id_b"))
-                 .select("id_a", "id_b",
-                         F.round(dot / (F.col("_na") * F.col("_nb")),
-                                 4).alias("cos_sim"))
-                 .filter(F.col("cos_sim") >= threshold))
+            # per-bucket numpy kernel: only corpus vectors cross
+            # Arrow, the quadratic pair set never leaves the task
+            p = _bucket_pairs_arrow(
+                buckets.select("id", "v", F.col(f"b{t}").alias("_bk")),
+                threshold)
             cand = p if cand is None else cand.unionByName(p)
         # dedup only the SURVIVING pairs (a pair colliding in several
         # tables verifies to the identical rounded cosine each time,

@@ -247,8 +247,9 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
     catalog = ParquetCatalog(spark, warehouse)
     pages = catalog.read("pages_filtered")
 
-    # day set = the snapshot identity; one tiny row per day (partition
-    # listing on a real Iceberg table), not a data collect
+    # day set = the snapshot identity: a distinct scan of the
+    # warc_date column plus a collect of one tiny row per day (a table
+    # format with partition metadata could list it without the scan)
     days = sorted(str(r[0]) for r in
                   pages.select("warc_date").distinct().collect())
     snap = hashlib.md5(",".join(days).encode()).hexdigest()[:16]

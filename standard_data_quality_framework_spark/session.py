@@ -7,6 +7,7 @@ spark-defaults for a real cluster (AQE, Arrow, sensible shuffle sizing).
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -22,19 +23,24 @@ def get_spark(
     ``cores=None`` → ``local[*]``. ``shuffle_partitions`` defaults to the
     core count — on a real cluster this would be ~2-3× total executor
     cores; AQE coalescing makes the exact number non-critical.
+
+    Reusing a running session applies the ``spark.sql.*`` settings, but
+    the master and every other conf were fixed when its SparkContext
+    started: each one requested with a different value is named in a
+    ``RuntimeWarning`` (``spark.conf.get`` would echo the requested
+    value back while the context keeps running with the old one).
     """
     cores_s = "*" if cores is None else str(cores)
     n_shuffle = shuffle_partitions or (os.cpu_count() if cores is None else cores)
-    b = (
-        SparkSession.builder.master(f"local[{cores_s}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(n_shuffle))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+    master = f"local[{cores_s}]"
+    conf = {
+        "spark.sql.shuffle.partitions": str(n_shuffle),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
         # Byte-bound Arrow batches (Spark 4 knob): multi-KB text rows
         # would otherwise ship ~40 MB batches (10k records) through
         # the pandas-UDF workers — measured on the 600k-page pipeline
@@ -43,8 +49,8 @@ def get_spark(
         # runs, while narrow numeric Arrow traffic (embeddings etc.)
         # stays at the 10k-record bound. Row-size-dependent, not
         # data-size-dependent — the same clamp is correct at 100 TB.
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", "8388608")
-        .config("spark.driver.memory", os.environ.get("SDQF_DRIVER_MEM", "16g"))
+        "spark.sql.execution.arrow.maxBytesPerBatch": "8388608",
+        "spark.driver.memory": os.environ.get("SDQF_DRIVER_MEM", "16g"),
         # the unrolled vector math (similarity._dot) generates Java
         # methods past HotSpot's 8000-bytecode JIT refusal threshold
         # (-XX:DontCompileHugeMethods default); without this flag those
@@ -54,18 +60,34 @@ def get_spark(
         # (wide schemas hit the same cliff); on a cluster the same
         # flag goes in spark.executor.extraJavaOptions too (local mode
         # has one JVM, so driver covers both roles here).
-        .config("spark.driver.extraJavaOptions",
-                "-XX:-DontCompileHugeMethods "
-                "-XX:ReservedCodeCacheSize=512m")
-        .config("spark.executor.extraJavaOptions",
-                "-XX:-DontCompileHugeMethods "
-                "-XX:ReservedCodeCacheSize=512m")
-        .config("spark.ui.enabled", "false")
+        "spark.driver.extraJavaOptions":
+            "-XX:-DontCompileHugeMethods -XX:ReservedCodeCacheSize=512m",
+        "spark.executor.extraJavaOptions":
+            "-XX:-DontCompileHugeMethods -XX:ReservedCodeCacheSize=512m",
+        "spark.ui.enabled": "false",
         # parquet split sizing: at 100 TB this keeps scan tasks ~128 MB
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-    )
-    for k, v in (extra_conf or {}).items():
+        "spark.sql.files.maxPartitionBytes": "134217728",
+        **(extra_conf or {}),
+    }
+    b = SparkSession.builder.master(master).appName(app_name)
+    for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sc = spark.sparkContext
+    sc.setLogLevel("WARN")
+    running = dict(sc.getConf().getAll())
+    stale = [] if sc.master == master else [
+        f"master={master!r} (running {sc.master!r})"]
+    for k, v in conf.items():
+        have = running.get(k)
+        # Spark prepends its own JVM flags to *.extraJavaOptions
+        if k.startswith("spark.sql.") or have == v or (
+                have or "").endswith(" " + v):
+            continue
+        stale.append(f"{k}={v!r} (running {have!r})")
+    if stale:
+        warnings.warn(
+            "get_spark reused a running SparkContext; these settings did "
+            "not take effect (stop the session to change them): "
+            + ", ".join(stale), RuntimeWarning, stacklevel=2)
     return spark

@@ -1005,6 +1005,39 @@ def test_grouped_quantiles_exact_matches_per_alias(spark):
     assert (got == want).all().all()
 
 
+def _embedding_pairs_native(df, id_col, vec_col, threshold, n_planes,
+                            dim, n_tables):
+    """Reference for the arrow verify: the same sign-LSH tables, each
+    candidate verified in-stream by Catalyst (broadcast bucket join,
+    fold-form cosine, Round(·, 4)), then distinct."""
+    v = df.select(F.col(id_col).alias("id"),
+                  F.col(vec_col).cast("array<double>").alias("v"))
+    buckets = v.select(
+        "id", "v", F.sqrt(similarity._sqnorm(F.col("v"))).alias("_n"),
+        *[similarity.lsh_bucket_col(F.col("v"), n_planes, dim,
+                                    first_plane=t * n_planes).alias(f"b{t}")
+          for t in range(n_tables)])
+    dot = similarity._dot(F.col("va"), F.col("vb"))
+    cand = None
+    for t in range(n_tables):
+        a = buckets.select(F.col("id").alias("id_a"),
+                           F.col("v").alias("va"),
+                           F.col("_n").alias("_na"),
+                           F.col(f"b{t}").alias("_bk"))
+        b = buckets.select(F.col("id").alias("id_b"),
+                           F.col("v").alias("vb"),
+                           F.col("_n").alias("_nb"),
+                           F.col(f"b{t}").alias("_bk"))
+        p = (a.join(F.broadcast(b), "_bk")
+             .filter(F.col("id_a") < F.col("id_b"))
+             .select("id_a", "id_b",
+                     F.round(dot / (F.col("_na") * F.col("_nb")),
+                             4).alias("cos_sim"))
+             .filter(F.col("cos_sim") >= threshold))
+        cand = p if cand is None else cand.unionByName(p)
+    return cand.distinct()
+
+
 def test_embedding_verify_arrow_native_parity(spark):
     # r6: the per-bucket numpy verify must be BIT-identical to the
     # native expression path (fold order + HALF_UP rounding replicated)
@@ -1015,9 +1048,9 @@ def test_embedding_verify_arrow_native_parity(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     kw = dict(threshold=0.5, n_planes=2, dim=16, n_tables=2)
     arrow = dedup.embedding_neardup_pairs(
-        df, "vec_id", "embedding", verify_impl="arrow", **kw).toPandas()
-    native = dedup.embedding_neardup_pairs(
-        df, "vec_id", "embedding", verify_impl="native", **kw).toPandas()
+        df, "vec_id", "embedding", **kw).toPandas()
+    native = _embedding_pairs_native(
+        df, "vec_id", "embedding", **kw).toPandas()
     a = arrow.sort_values(["id_a", "id_b"]).reset_index(drop=True)
     b = native.sort_values(["id_a", "id_b"]).reset_index(drop=True)
     assert len(a) == len(b) and len(a) > 100
