@@ -52,7 +52,7 @@ def main(argv: list[str] | None = None) -> int:
             import run_streaming_filter
         q = run_streaming_filter(
             spark, args.input, f"{args.warehouse}/pages_filtered",
-            f"{args.warehouse}/_checkpoints", trigger_once=True)
+            f"{args.warehouse}/_checkpoints")
         q.awaitTermination()
         print(json.dumps({"mode": "streaming", "status": "done"}))
         return 0

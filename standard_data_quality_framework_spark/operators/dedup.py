@@ -287,41 +287,6 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
 N_SIMHASH_BITS = 32
 
 
-def simhash_exploded(df: DataFrame, id_col: str, text_col: str,
-                    n_bits: int = N_SIMHASH_BITS) -> DataFrame:
-    """(id, simhash) — sign fingerprint over term-frequency-weighted
-    word hashes, via the EXPLODED shape: explode words → explode bit
-    positions → conditional sum per bit → assemble. Whole-stage
-    codegen throughout, but shuffles 32 rows per distinct token.
-    Measured LOSER of the r4 task #7 A/B (BENCH/simhash_rowfold_ab.json:
-    33.1/7.3 s vs 22.9/5.2 s for the row-fold in matched slots at 80k
-    docs, 32 cores) — kept as the documented alternative for CPU-bound
-    clusters where interpreter cost dominates shuffle cost."""
-    toks = (df.select(F.col(id_col).alias("id"),
-                      F.explode(F.split(F.trim(F.col(text_col)),
-                                        r"\s+")).alias("w"))
-            .filter(F.length("w") > 0)
-            .groupBy("id", "w").agg(F.count("*").alias("tf"))
-            .withColumn("h", hash60(F.col("w"))))
-    bits = toks.select(
-        "id",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(j).alias("bit"),
-                (F.col("tf") * F.when(
-                    F.pmod(F.shiftright(F.col("h"), j),
-                           F.lit(2)) == 1, 1).otherwise(-1)).alias("v"))
-            for j in range(n_bits)
-        ])).alias("bv"))
-    per_bit = (bits.groupBy("id", F.col("bv.bit").alias("bit"))
-               .agg(F.sum("bv.v").alias("s")))
-    return (per_bit.groupBy("id")
-            .agg(F.sum(F.when(F.col("s") > 0,
-                              F.pow(F.lit(2.0), F.col("bit"))
-                              .cast("long")).otherwise(0))
-                 .alias("simhash")))
-
-
 def simhash(df: DataFrame, id_col: str, text_col: str,
             n_bits: int = N_SIMHASH_BITS) -> DataFrame:
     """(id, simhash) — sign fingerprint over term-frequency-weighted
@@ -330,9 +295,10 @@ def simhash(df: DataFrame, id_col: str, text_col: str,
     and — r6 — ZERO interpreted expressions: the 32 per-bit sums are
     32 plain ``sum`` aggregate columns of the same id-keyed groupBy
     (codegen hash aggregate; integer sums are order-free, so values
-    are bit-identical to the r5 row-fold, which tests still pin via
-    simhash_exploded parity). The r5 shape collected (h, tf) structs
-    per doc and folded them with a 32-wide ``aggregate``/``zip_with``
+    are bit-identical to the r5 row-fold, which the operator tests
+    pin against an exploded per-bit reference). The r5 shape collected
+    (h, tf) structs per doc and folded them with a 32-wide
+    ``aggregate``/``zip_with``
     lambda — CodegenFallback, ~n_bits × |tokens| interpreted ops per
     doc, and the fold sat ABOVE the agg exchange so band-pair callers
     re-ran it per join branch. Shuffle bytes: ≤ 32 longs per (doc,

@@ -1,14 +1,12 @@
-"""Multimodal columns: image/audio/video as opaque binary + typed
-metadata, with the Spark-side plumbing (schema, partitioning, Arrow
-batch shape) fully real and the codec step stubbed.
+"""Video-style frame sampling over opaque binary cells.
 
-The container has no image/audio libraries, so the decode kernels are
-deterministic fakes behind ``_HAS_CODECS`` (or raise
-NotImplementedError when ``strict=True``) — swapping in Pillow/librosa
-changes ONE function body, not the plan. This mirrors how the
-reference treats DICOM/NRRD voxels as per-file arrays
-(/root/reference/src/utils.py:107-167) — here they are binary cells
-of a distributed table instead of local files.
+The Spark-side plumbing (1→N ``mapInPandas`` row fan-out, Arrow batch
+shape, output schema) is real; the per-frame feature is a
+deterministic byte statistic, because the container has no codec
+libraries. A real decoder swaps the chunk step for keyframe
+extraction without touching the plan. The registry query
+``multimodal_frame_offsets`` gates the sampling geometry against
+DuckDB.
 """
 
 from __future__ import annotations
@@ -19,85 +17,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_HAS_CODECS = False  # flips when a real codec lib is importable
-try:  # pragma: no cover - not present in this container
-    import PIL.Image  # noqa: F401
-    _HAS_CODECS = True
-except Exception:
-    pass
-
-MEDIA_SCHEMA = ("id long, kind string, byte_len long, magic string, "
-                "width int, height int, n_frames int, feat array<double>")
-
-
-def media_metadata(df: DataFrame, id_col: str, bin_col: str) -> DataFrame:
-    """Native metadata over binary cells: length + magic-byte sniff.
-
-    Pure Catalyst — the cheap pass that routes blobs to the right
-    decode kernel without any Python."""
-    b = F.col(bin_col)
-    magic = F.upper(F.hex(F.substring(b, 1, 4)))
-    kind = (F.when(magic.startswith("FFD8"), "jpeg")
-            .when(magic.startswith("89504E47"), "png")
-            .when(magic.startswith("52494646"), "riff")
-            .when(magic.startswith("3C68746D") | magic.startswith("3C21"),
-                  "html")
-            .otherwise("unknown"))
-    return df.select(F.col(id_col).alias("id"),
-                     F.length(b).alias("byte_len"),
-                     magic.alias("magic"), kind.alias("kind"))
-
-
-def decode_image_stub(data: bytes) -> tuple[int, int, list[float]]:
-    """STUB decode: deterministic fake (width, height, 4-dim feature).
-
-    Real deployment: replace body with PIL.Image.open(BytesIO(data)).
-    The fake derives stable pseudo-dimensions from the bytes so tests
-    can assert the full distributed round-trip."""
-    if _HAS_CODECS:  # pragma: no cover
-        raise NotImplementedError("wire the real codec here")
-    n = len(data)
-    w = 16 + (n % 64)
-    h = 16 + ((n // 64) % 64)
-    # numpy, not a per-byte Python loop: the batch is already Arrow
-    # and frombuffer is ~30× faster (micro-bench in audio_stats)
-    s = int(np.frombuffer(data[:256], np.uint8).sum()) if n else 0
-    feat = [float(n), float(s % 997), float(w * h), float(s % 31)]
-    return w, h, feat
-
-
-def decode_media(df: DataFrame, id_col: str, bin_col: str,
-                 batch_limit_mb: int = 64) -> DataFrame:
-    """mapInPandas decode: binary blobs → (dims, frames, feature vec).
-
-    Arrow-batched; ``batch_limit_mb`` documents the knob that matters
-    at scale (maxRecordsPerBatch × blob size must fit worker memory —
-    set spark.sql.execution.arrow.maxRecordsPerBatch accordingly
-    before calling this on multi-MB media)."""
-    id_name = id_col
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, blob in zip(pdf[id_name], pdf["_bin"]):
-                if blob is None:
-                    rows.append((rid, "missing", 0, "", None, None, 0, []))
-                    continue
-                data = bytes(blob)
-                magic = data[:4].hex().upper()
-                kind = "jpeg" if magic.startswith("FFD8") else (
-                    "png" if magic.startswith("89504E47") else "blob")
-                w, h, feat = decode_image_stub(data)
-                rows.append((rid, kind, len(data), magic, w, h, 1, feat))
-            yield pd.DataFrame(rows, columns=[
-                "id", "kind", "byte_len", "magic", "width", "height",
-                "n_frames", "feat"])
-
-    src = df.select(F.col(id_col).alias(id_name),
-                    F.col(bin_col).alias("_bin"))
-    return src.mapInPandas(_decode, MEDIA_SCHEMA)
-
 
 FRAME_SCHEMA = ("id long, frame_idx int, frame_off long, "
                 "frame_len int, frame_feat array<double>")
@@ -141,49 +60,3 @@ def sample_frames(df: DataFrame, id_col: str, bin_col: str,
     src = df.select(F.col(id_col).alias(id_name),
                     F.col(bin_col).alias("_bin"))
     return src.mapInPandas(_frames, FRAME_SCHEMA)
-
-
-AUDIO_SCHEMA = ("id long, n_bytes long, est_duration_s double, "
-                "rms double, peak int")
-
-
-def audio_stats(df: DataFrame, id_col: str, bin_col: str,
-                sample_rate: int = 16000,
-                bytes_per_sample: int = 2) -> DataFrame:
-    """Audio-style stats over binary cells: duration estimate from the
-    byte length (real once a demuxer reports the true rate) plus RMS /
-    peak computed over the raw bytes interpreted as unsigned samples —
-    a REAL distributed computation with a fake interpretation,
-    replaced wholesale by a decoder without touching the plan."""
-    id_name = id_col
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-        for pdf in batches:
-            rows = []
-            for rid, blob in zip(pdf[id_name], pdf["_bin"]):
-                if blob is None:
-                    rows.append((rid, 0, 0.0, 0.0, 0))
-                    continue
-                data = bytes(blob)
-                n = len(data)
-                dur = n / (sample_rate * bytes_per_sample)
-                if n:
-                    # vectorized sample math: np.frombuffer over the
-                    # head window is ~30× faster than the per-byte
-                    # Python loop it replaces (measured 0.43s → 0.014s
-                    # for 200 × 64 KiB), and int64 avoids uint8
-                    # overflow in the square-sum
-                    a = np.frombuffer(data[:65536],
-                                      np.uint8).astype(np.int64)
-                    rms = math.sqrt(int((a * a).sum()) / min(n, 65536))
-                    peak = int(a.max())
-                else:
-                    rms, peak = 0.0, 0
-                rows.append((rid, n, round(dur, 6), round(rms, 6), peak))
-            yield pd.DataFrame(rows, columns=[
-                "id", "n_bytes", "est_duration_s", "rms", "peak"])
-
-    src = df.select(F.col(id_col).alias(id_name),
-                    F.col(bin_col).alias("_bin"))
-    return src.mapInPandas(_stats, AUDIO_SCHEMA)

@@ -19,19 +19,16 @@ def _flag(c) -> F.Column:
     return F.when(c, 1).otherwise(0)
 
 
-def completeness(df: DataFrame, cols: list[str],
-                 empty_string_is_missing: bool = True) -> DataFrame:
-    """Non-missing cells / total cells + per-column missing counts.
+def completeness(df: DataFrame, cols: list[str]) -> DataFrame:
+    """Non-missing cells / total cells + per-column missing counts; a
+    cell is missing when it is NULL or casts to the empty string.
 
     Reference: quality_checks.py:215-242 (NaN as missing), with the
     empty-string sentinel of uc3_timeseries_quality_checks.py:824-830.
     Output: one row (score, n_rows, missing_<col>...).
     """
     def missing(c: str):
-        m = F.col(c).isNull()
-        if empty_string_is_missing:
-            m = m | (F.col(c).cast("string") == "")
-        return m
+        return F.col(c).isNull() | (F.col(c).cast("string") == "")
 
     aggs = [F.count("*").alias("n_rows")]
     for c in cols:

@@ -230,11 +230,21 @@ def salted_domain_counts(df: DataFrame) -> DataFrame:
 # Full pipeline
 # ---------------------------------------------------------------------------
 
+def kept_pages(verdicts: DataFrame) -> DataFrame:
+    """The kept rows of a verdict frame in the ``pages_filtered``
+    schema: (url, warc_ts, text = scrubbed text, lang = predicted
+    language, warc_date, url_bucket)."""
+    return (verdicts.filter(F.col("keep"))
+            .select("url", "warc_ts",
+                    F.col("scrubbed_text").alias("text"),
+                    F.col("lang_pred").alias("lang"),
+                    "warc_date", "url_bucket"))
+
+
 @dataclass
 class PipelineOutput:
     verdicts: DataFrame  # full per-doc frame (signals + verdict + scrub)
-    kept: DataFrame      # (url, warc_ts, text=scrubbed, lang=lang_pred,
-    #                       warc_date, url_bucket) — no html: the sink
+    kept: DataFrame      # kept_pages(verdicts) — no html: the sink
     #                       contract is verdict + scrubbed text per doc
     signals: DataFrame | None = None  # pre-verdict frame (before the
     #                       dedup checkpoint barrier) — the plan audit
@@ -290,10 +300,4 @@ def run_quality_filter(spark: SparkSession, pages: DataFrame,
                         F.coalesce(F.col("_scrub_opt"), F.col("etext")))
           .drop("_scrub_opt"))
     df = with_partition_cols(df)
-
-    kept = (df.filter(F.col("keep"))
-            .select("url", "warc_ts",
-                    F.col("scrubbed_text").alias("text"),
-                    F.col("lang_pred").alias("lang"),
-                    "warc_date", "url_bucket"))
-    return PipelineOutput(verdicts=df, kept=kept, signals=sig)
+    return PipelineOutput(verdicts=df, kept=kept_pages(df), signals=sig)

@@ -2065,18 +2065,20 @@ SELECT a AS id, min(b) AS cluster_id,
 FROM reach GROUP BY a
 """)
 def global_dedup_clusters_q(spark, sf_dir):
-    """Dataset-global near-dup clustering (the runner's global_dedup
-    stage): MinHash-LSH pairs → connected components, over documents
-    spread across 3 synthetic crawl days — cluster membership ignores
-    the day boundary, which is exactly what the in-pipeline per-day
-    dedup window cannot see. Oracle mirrors the component labels with
-    a recursive reachability CTE (min reachable id)."""
+    """Dataset-global near-dup clustering through the runner's own
+    ``cluster_labels``: MinHash-LSH pairs → connected components over
+    the pair-incident docs, every other doc its own singleton cluster.
+    The documents are spread across 3 synthetic crawl days — cluster
+    membership ignores the day boundary, which is exactly what the
+    in-pipeline per-day dedup window cannot see. Oracle mirrors the
+    component labels with a recursive reachability CTE (min reachable
+    id)."""
     d = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("id"), "text",
         (1 + F.col("doc_id") % 3).cast("int").alias("day"))
     pairs = dedup.minhash_lsh_pairs(d, "id", "text", n=5,
                                     num_hashes=16, bands=4, threshold=0.5)
-    labels = dedup.connected_components(d.select("id"), pairs)
+    labels = dedup.cluster_labels(d.select("id"), pairs)
     return (d.select("id", "day").join(labels, "id")
             .select("id", F.col("label").alias("cluster_id"), "day",
                     (F.col("label") != F.col("id")).alias("is_dup")))

@@ -40,11 +40,14 @@ from pyspark.sql import functions as F
 
 from .metrics import (day_summary, dropped_by_rule, lineage_rows,
                       metrics_from_summary)
-from .pipeline import run_quality_filter, with_partition_cols
+from .pipeline import kept_pages, run_quality_filter, with_partition_cols
 from .sources.catalog import ParquetCatalog
 
 STAGE = "quality_filter"
 GLOBAL_DEDUP_STAGE = "global_dedup"
+# global-dedup MinHash-LSH shape: word 5-gram shingles, 16 hashes in
+# 4 bands of 4
+SHINGLE_N, NUM_HASHES, BANDS = 5, 16, 4
 
 
 def pending_dates(catalog: ParquetCatalog, pages: DataFrame) -> DataFrame:
@@ -117,12 +120,8 @@ def run(spark: SparkSession, pages: DataFrame, warehouse: str,
     verdicts = observed.persist()
     summary = None
     try:
-        kept = (verdicts.filter(F.col("keep"))
-                .select("url", "warc_ts",
-                        F.col("scrubbed_text").alias("text"),
-                        F.col("lang_pred").alias("lang"),
-                        "warc_date", "url_bucket"))
-        catalog.overwrite_partitions(kept, "pages_filtered", ["warc_date"])
+        catalog.overwrite_partitions(kept_pages(verdicts), "pages_filtered",
+                                     ["warc_date"])
 
         summary = day_summary(verdicts).persist()
         # per-partition overwrite (NOT append): a replay of a partition
@@ -152,8 +151,8 @@ def run(spark: SparkSession, pages: DataFrame, warehouse: str,
             "observed": counters, "schema_presence": presence}
 
 
-def _neardup_edges(docs: DataFrame, n: int, num_hashes: int, bands: int,
-                   threshold: float, max_bucket_size: int | None) -> DataFrame:
+def _neardup_edges(docs: DataFrame, threshold: float,
+                   max_bucket_size: int | None) -> DataFrame:
     """(id_a, id_b) near-dup edges = MinHash-LSH verified pairs ∪
     exact-duplicate star edges.
 
@@ -164,8 +163,8 @@ def _neardup_edges(docs: DataFrame, n: int, num_hashes: int, bands: int,
     template docs still cluster — B identical docs cost B−1 star
     edges through a uniform-key window, never B²/2 pairs."""
     from .operators.dedup import exact_duplicates, minhash_lsh_pairs
-    lsh = (minhash_lsh_pairs(docs, "id", "text", n=n,
-                             num_hashes=num_hashes, bands=bands,
+    lsh = (minhash_lsh_pairs(docs, "id", "text", n=SHINGLE_N,
+                             num_hashes=NUM_HASHES, bands=BANDS,
                              threshold=threshold,
                              max_bucket_size=max_bucket_size)
            .select("id_a", "id_b"))
@@ -185,13 +184,10 @@ def _literal_row(spark: SparkSession, cols: list[tuple]) -> DataFrame:
 
 
 def run_global_dedup(spark: SparkSession, warehouse: str,
-                     run_id: str | None = None, n: int = 5,
-                     num_hashes: int = 16, bands: int = 4,
+                     run_id: str | None = None,
                      threshold: float = 0.85,
                      max_bucket_size: int | None = 500,
-                     incremental: bool = True,
-                     delta_member_sample: int = 0,
-                     full_rebuild_every: int | None = None) -> dict:
+                     incremental: bool = True) -> dict:
     """Cross-day near-duplicate clustering over the whole
     ``pages_filtered`` warehouse table → ``dup_clusters``.
 
@@ -221,12 +217,10 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
     near-clique LSH clusters (threshold ≥ 0.85) the canonical is
     usually an ε-cover of its cluster and the labels coincide (the
     warehouse tests exercise that benign case), but it is a
-    heuristic, not a guarantee. Two knobs bound the drift:
-    ``delta_member_sample=k`` also pairs new docs against up to k
-    deterministically-sampled non-canonical members per prior
-    cluster; ``full_rebuild_every=m`` forces a full rebuild after m
-    consecutive delta ingests (chain depth is tracked in the tiny
-    ``dedup_state`` table).
+    heuristic, not a guarantee. The drift is bounded by a full
+    rebuild: ``incremental=False`` (the CLI's ``--full-dedup``)
+    re-pairs all history and its labels are the baseline of the
+    next delta.
 
     Resume contract: the unit of work is the SNAPSHOT — the sorted set
     of warc_dates present in pages_filtered, fingerprinted into
@@ -267,30 +261,17 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
     all_ids = docs.select("id").distinct()
 
     # delta eligibility: dup_clusters holds a committed strict-subset
-    # snapshot of the current day set, and the delta chain is shorter
-    # than full_rebuild_every (drift bound)
+    # snapshot of the current day set
     mode = "full"
     prior = None
-    prior_depth = 0
     if incremental and catalog.exists("dup_clusters"):
         prior = catalog.read("dup_clusters")
         prior_days = sorted(str(r[0]) for r in
                             prior.select("warc_date").distinct().collect())
         prior_snap = hashlib.md5(
             ",".join(prior_days).encode()).hexdigest()[:16]
-        # honor chain_depth only when the state row was written FOR the
-        # snapshot dup_clusters currently represents (ADVICE r4): a
-        # stale marker — dup_clusters wiped/rebuilt out-of-band, or
-        # state left by an aborted sequence — would force or defer full
-        # rebuilds at the wrong cadence. Mismatch ⇒ treat depth as 0.
-        st = (catalog.read("dedup_state").first()
-              if catalog.exists("dedup_state") else None)
-        if st is not None and str(st.snapshot) == prior_snap:
-            prior_depth = int(st.chain_depth)
         if (prior_days and set(prior_days) < set(days)
-                and prior_snap in done_keys
-                and (full_rebuild_every is None
-                     or prior_depth + 1 < full_rebuild_every)):
+                and prior_snap in done_keys):
             mode = "delta"
             new_days = sorted(set(days) - set(prior_days))
 
@@ -298,38 +279,21 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
     if mode == "delta":
         canon_ids = (prior.filter(F.col("is_canonical"))
                      .select(F.col("url").alias("id")).distinct())
-        pair_ids = canon_ids
-        if delta_member_sample > 0:
-            # bounded sample of NON-canonical members per prior cluster
-            # (deterministic: best k by url hash) — narrows the
-            # "similar to a member but not the canonical" miss window
-            # at O(k · clusters) extra LSH work
-            from pyspark.sql import Window
-            wm = (Window.partitionBy("cluster_id")
-                  .orderBy(F.xxhash64("url"), "url"))
-            member_ids = (prior.filter(~F.col("is_canonical"))
-                          .select("url", "cluster_id").distinct()
-                          .withColumn("_rk", F.row_number().over(wm))
-                          .filter(F.col("_rk") <= delta_member_sample)
-                          .select(F.col("url").alias("id")))
-            pair_ids = canon_ids.unionByName(member_ids).distinct()
         pool = (docs.filter(F.col("warc_date").cast("string")
                             .isin(new_days))
                 .select("id", "text")
                 .unionByName(docs.select("id", "text")
-                             .join(pair_ids, "id", "left_semi"))
+                             .join(canon_ids, "id", "left_semi"))
                 .dropDuplicates(["id", "text"]))
         lsh_docs = pool.count()
-        new_edges = _neardup_edges(pool, n, num_hashes, bands,
-                                   threshold, max_bucket_size)
+        new_edges = _neardup_edges(pool, threshold, max_bucket_size)
         prior_star = (prior.filter(F.col("url") != F.col("cluster_id"))
                       .select(F.col("cluster_id").alias("id_a"),
                               F.col("url").alias("id_b"))
                       .distinct())
         edges = new_edges.unionByName(prior_star).distinct()
     else:
-        edges = _neardup_edges(docs, n, num_hashes, bands,
-                               threshold, max_bucket_size)
+        edges = _neardup_edges(docs, threshold, max_bucket_size)
 
     from .operators import dedup
     labels = dedup.cluster_labels(all_ids, edges)
@@ -377,18 +341,10 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
         ("rows_in", "long", n_rows),
         ("rows_out", "long", n_clusters)])
         .withColumn("finished_ts", F.current_timestamp()), "lineage")
-    # delta-chain depth marker for full_rebuild_every (one tiny row)
-    depth = 0 if mode == "full" else prior_depth + 1
-    _literal_row(spark, [
-        ("snapshot", "string", snap),
-        ("mode", "string", mode),
-        ("chain_depth", "int", depth),
-        ("run_id", "string", run_id)]) \
-        .write.mode("overwrite").parquet(catalog.path("dedup_state"))
     return {"run_id": run_id, "snapshot": snap, "resumed": False,
             # 'delta-approx', not 'delta': labels can diverge from a
             # from-scratch rebuild (see docstring)
             "mode": "delta-approx" if mode == "delta" else mode,
-            "delta_depth": depth, "lsh_docs": lsh_docs,
+            "lsh_docs": lsh_docs,
             "rows": n_rows, "clusters": n_clusters,
             "dup_rows": int(tot.dup_rows)}

@@ -1,13 +1,17 @@
-"""Table-catalog abstraction: Iceberg when the runtime jar is present,
-a functionally equivalent Hive-partitioned-parquet fallback otherwise.
+"""Table catalogs: Hive-partitioned parquet, plus an Iceberg class
+with the same append / partition-overwrite methods.
 
-The pipeline code only ever talks to the abstraction, so the Iceberg
-path is configuration, not code:
+The runner does NOT go through an abstraction yet: ``runner.run`` and
+``runner.run_global_dedup`` build a ``ParquetCatalog`` directly, and
+global dedup also writes raw parquet at ``catalog.path(...)`` — a
+method ``IcebergCatalog`` lacks. Wiring Iceberg in is therefore code,
+not configuration:
 
   * ``IcebergCatalog`` issues ``writeTo(tbl).append()`` /
     ``overwritePartitions()`` against a configured Spark catalog
-    (requires iceberg-spark-runtime on the classpath — not available
-    in this sandbox, gated behind a capability probe).
+    (requires iceberg-spark-runtime on the classpath; the capability
+    probe in ``get_catalog`` picks it only when the jar is present,
+    and nothing calls ``get_catalog`` yet).
   * ``ParquetCatalog`` provides the same commit semantics on plain
     parquet: partitioned layout (``warc_date=.../``), an append-only
     lineage table via unique-file append (parquet part files with a

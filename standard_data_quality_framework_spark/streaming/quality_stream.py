@@ -57,9 +57,10 @@ PAGES_SCHEMA = T.StructType([
 
 
 def run_streaming_filter(spark: SparkSession, input_dir: str,
-                         output_dir: str, checkpoint_dir: str,
-                         trigger_once: bool = True):
-    """Incremental quality filter over files arriving in input_dir."""
+                         output_dir: str, checkpoint_dir: str):
+    """Incremental quality filter over the files in input_dir that
+    earlier runs with this checkpoint have not processed: an
+    ``availableNow`` trigger drains them in micro-batches and stops."""
     udfs = make_udfs(spark)
     stream = (spark.readStream.schema(PAGES_SCHEMA)
               .option("maxFilesPerTrigger", "8")
@@ -75,12 +76,11 @@ def run_streaming_filter(spark: SparkSession, input_dir: str,
          .partitionBy("batch_id", "warc_date")
          .parquet(output_dir))
 
-    writer = (stream.writeStream
-              .foreachBatch(process_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (stream.writeStream
+            .foreachBatch(process_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start())
 
 
 DEDUP_OUT_SCHEMA = ("id string, content_hash string, is_dup boolean, "

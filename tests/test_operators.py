@@ -10,6 +10,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from standard_data_quality_framework_spark.functions.hashing import hash60
 from standard_data_quality_framework_spark.operators import (
     dedup, multimodal, quality, sampling, similarity, textstats)
 
@@ -383,22 +384,6 @@ def test_expected_columns_presence(spark):
     assert full.score[0] == 1.0 and full.missing_cols[0] == ""
 
 
-def test_multimodal_stub_roundtrip(spark):
-    rows = [(1, bytes([0xFF, 0xD8, 0xFF]) + b"x" * 100),
-            (2, bytes([0x89, 0x50, 0x4E, 0x47]) + b"y" * 50),
-            (3, None)]
-    df = spark.createDataFrame(rows, "id long, blob binary")
-    meta = multimodal.media_metadata(df, "id", "blob").toPandas() \
-        .set_index("id")
-    assert meta.loc[1, "kind"] == "jpeg"
-    assert meta.loc[2, "kind"] == "png"
-    dec = multimodal.decode_media(df, "id", "blob").toPandas() \
-        .set_index("id")
-    assert dec.loc[1, "byte_len"] == 103
-    assert dec.loc[3, "kind"] == "missing"
-    assert len(dec.loc[1, "feat"]) == 4
-
-
 def test_multimodal_frame_sampling_and_audio(spark):
     rows = [(1, bytes(range(256)) * 100),   # 25,600 bytes → 4 frames
             (2, b"tiny"),                   # below frame size → 0 rows
@@ -412,12 +397,6 @@ def test_multimodal_frame_sampling_and_audio(spark):
     assert fr.frame_off.is_monotonic_increasing
     assert fr.frame_off.max() == 25600 - 4096        # last frame at tail
     assert fr.frame_feat.map(len).eq(4).all()
-
-    au = multimodal.audio_stats(df, "id", "blob").toPandas().set_index("id")
-    assert au.loc[1, "n_bytes"] == 25600
-    assert au.loc[1, "est_duration_s"] == 0.8        # 25600/(16000*2)
-    assert au.loc[1, "peak"] == 255
-    assert au.loc[3, "n_bytes"] == 0
 
 
 def test_ivf_kmeans_quantizer_recall_and_determinism(spark):
@@ -730,12 +709,41 @@ def test_decontaminate_planted_overlap(spark):
                - out.loc[1, "n_contaminated"] / out.loc[1, "n_grams"]) < 1e-6  # 6-dp rounding
 
 
+def _simhash_exploded(df, id_col, text_col, n_bits):
+    """Bit-exact reference for ``dedup.simhash``: the same tf-weighted
+    sign fingerprint via the exploded shape — explode words → explode
+    bit positions → conditional sum per bit → assemble."""
+    toks = (df.select(F.col(id_col).alias("id"),
+                      F.explode(F.split(F.trim(F.col(text_col)),
+                                        r"\s+")).alias("w"))
+            .filter(F.length("w") > 0)
+            .groupBy("id", "w").agg(F.count("*").alias("tf"))
+            .withColumn("h", hash60(F.col("w"))))
+    bits = toks.select(
+        "id",
+        F.explode(F.array(*[
+            F.struct(
+                F.lit(j).alias("bit"),
+                (F.col("tf") * F.when(
+                    F.pmod(F.shiftright(F.col("h"), j),
+                           F.lit(2)) == 1, 1).otherwise(-1)).alias("v"))
+            for j in range(n_bits)
+        ])).alias("bv"))
+    per_bit = (bits.groupBy("id", F.col("bv.bit").alias("bit"))
+               .agg(F.sum("bv.v").alias("s")))
+    return (per_bit.groupBy("id")
+            .agg(F.sum(F.when(F.col("s") > 0,
+                              F.pow(F.lit(2.0), F.col("bit"))
+                              .cast("long")).otherwise(0))
+                 .alias("simhash")))
+
+
 def test_simhash_rowfold_bit_equals_exploded(spark, docs):
     """Judge r4 task #7: the default (row-fold, one id-keyed shuffle)
     and the exploded (per-bit shuffle) simhash must be bit-identical."""
     a = dedup.simhash(docs, "doc_id", "text", n_bits=32).toPandas() \
         .set_index("id").sort_index()
-    b = dedup.simhash_exploded(docs, "doc_id", "text", n_bits=32) \
+    b = _simhash_exploded(docs, "doc_id", "text", n_bits=32) \
         .toPandas().set_index("id").sort_index()
     assert (a.simhash == b.simhash).all()
 

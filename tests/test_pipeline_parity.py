@@ -88,23 +88,31 @@ def test_f1_and_class_mix(result, gold):
 
 def test_determinism_across_parallelism(spark, pages_df):
     """SURVEY §5.5: identical verdicts under different input
-    partitionings and Arrow batch sizes — no output may depend on
-    where a partition or a UDF batch happens to end."""
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    partitionings and Arrow batch sizes, in rows and in bytes — no
+    output may depend on where a partition or a UDF batch happens to
+    end. (A 4 KB byte cap cuts this fixture's UDF batches from 200 to
+    at most 8 rows.)"""
+    rows_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    bytes_key = "spark.sql.execution.arrow.maxBytesPerBatch"
+    base = {rows_key: "10000", bytes_key: "8388608"}
 
-    def verdicts(n_parts: int, batch_rows: int):
-        prev = spark.conf.get(key)
-        spark.conf.set(key, str(batch_rows))
+    def verdicts(n_parts: int, batch: dict | None = None):
+        conf = {**base, **(batch or {})}
+        prev = {k: spark.conf.get(k) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
         try:
             out = run_quality_filter(spark, pages_df.repartition(n_parts))
             return (out.verdicts
                     .select("url", "keep", "drop_reasons", "scrubbed_text")
                     .toPandas().sort_values("url").reset_index(drop=True))
         finally:
-            spark.conf.set(key, prev)
+            for k, v in prev.items():
+                spark.conf.set(k, v)
 
-    a = verdicts(3, 10000)
-    for b in (verdicts(13, 10000), verdicts(3, 1)):
+    a = verdicts(3)
+    for b in (verdicts(13), verdicts(3, {rows_key: "1"}),
+              verdicts(3, {bytes_key: "4096"})):
         assert (a["url"] == b["url"]).all()
         assert (a["keep"] == b["keep"]).all()
         assert (a["scrubbed_text"] == b["scrubbed_text"]).all()

@@ -1,4 +1,4 @@
-"""Tests for A6/A13/A15/A18 operators and the source readers."""
+"""Tests for A6/A13/A15/A18 operators."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from standard_data_quality_framework_spark.operators import quality
-from standard_data_quality_framework_spark.sources import readers
 
 
 def test_subgroup_diversity(spark):
@@ -47,60 +46,6 @@ def test_identical_columns(spark):
     df = spark.createDataFrame(rows, "a int, b int, c int, d string")
     out = quality.identical_columns(df, ["a", "b", "c", "d"]).toPandas()
     assert set(zip(out.col_a, out.col_b)) == {("a", "b")}
-
-
-def test_read_csv_and_vcf(spark, tmp_path):
-    csvp = tmp_path / "t.csv"
-    csvp.write_text("a,b\n1,x\n2,y\n")
-    df = readers.read_csv(spark, str(csvp), schema="a int, b string")
-    assert df.count() == 2 and df.schema["a"].dataType.typeName() == "integer"
-
-    vcfp = tmp_path / "t.vcf"
-    vcfp.write_text(
-        "##fileformat=VCFv4.2\n"
-        "##source=test\n"
-        "#CHROM\tPOS\tID\tREF\tALT\n"
-        "chr1\t100\trs1\tA\tG\n"
-        "chr2\t.\trs2\tC\t.\n")
-    body, meta = readers.read_vcf(spark, str(vcfp))
-    b = body.toPandas().sort_values("POS", na_position="first")
-    assert list(body.columns) == ["file", "CHROM", "POS", "ID", "REF", "ALT"]
-    assert set(b["CHROM"]) == {"chr1", "chr2"}
-    assert "." in set(b["POS"]) or "." in set(b["ALT"])  # sentinel survives
-    m = meta.toPandas()
-    assert set(m["key"]) == {"fileformat", "source"}
-
-
-def test_read_patient_json(spark, tmp_path):
-    import json
-    doc = {
-        "patient_id": "p1",
-        "episodes": [{
-            "demographics": {"age": 40.0, "gender": "f", "weight": -1.0,
-                             "diabeticStatus": "none"},
-            "time_series": {
-                "hr": [[1700000000000, 60.0], [1700000060000, 62.0]],
-                "spo2": [[1700000000000, 98.0]],
-            },
-        }],
-    }
-    p = tmp_path / "p1.json"
-    p.write_text(json.dumps(doc))
-    df = readers.read_patient_json(spark, str(p))
-    out = df.toPandas()
-    assert len(out) == 3
-    assert set(out["channel"]) == {"hr", "spo2"}
-    assert out["age"].iloc[0] == 40.0
-    assert str(out["ts"].min()).startswith("2023-11-14")
-
-
-def test_read_binary_dir(spark, tmp_path):
-    (tmp_path / "img_001.bin").write_bytes(b"\xff\xd8\xff" + b"a" * 10)
-    (tmp_path / "img_002.bin").write_bytes(b"\x89PNG" + b"b" * 5)
-    df = readers.read_binary_dir(spark, str(tmp_path), glob="*.bin")
-    out = df.toPandas().sort_values("id")
-    assert list(out["id"]) == ["img_001", "img_002"]
-    assert out["length"].tolist() == [13, 9]
 
 
 def test_grouped_quantiles_approx_relerr(spark):

@@ -17,7 +17,7 @@ def test_streaming_filter_matches_batch(spark, pages_df, tmp_path):
     # write input as several files to get multiple micro-batches
     pages_df.repartition(6).write.parquet(inp)
 
-    q = run_streaming_filter(spark, inp, out, ckpt, trigger_once=True)
+    q = run_streaming_filter(spark, inp, out, ckpt)
     q.awaitTermination(600)
 
     got = spark.read.parquet(out).select("url").toPandas()
@@ -26,7 +26,7 @@ def test_streaming_filter_matches_batch(spark, pages_df, tmp_path):
     assert sorted(got["url"]) == sorted(exp["url"])
 
     # restart with no new files → no duplicates (checkpoint replay safety)
-    q2 = run_streaming_filter(spark, inp, out, ckpt, trigger_once=True)
+    q2 = run_streaming_filter(spark, inp, out, ckpt)
     q2.awaitTermination(600)
     again = spark.read.parquet(out).select("url").toPandas()
     assert len(again) == len(got)
@@ -34,8 +34,7 @@ def test_streaming_filter_matches_batch(spark, pages_df, tmp_path):
     # retried epoch (fresh checkpoint, same sink): the epoch-keyed
     # dynamic overwrite rewrites batch_id=0 in place — append mode
     # here would double every row
-    q3 = run_streaming_filter(spark, inp, out, str(tmp_path / "ckpt2"),
-                              trigger_once=True)
+    q3 = run_streaming_filter(spark, inp, out, str(tmp_path / "ckpt2"))
     q3.awaitTermination(600)
     retried = spark.read.parquet(out).select("url").toPandas()
     assert sorted(retried["url"]) == sorted(got["url"])
