@@ -69,6 +69,8 @@ AUDIT = [
     ("url_dedup_documents",
      ["ShuffledHashJoin",
       r"Aggregate(.|\n)*Exchange(.|\n)*Aggregate"]),
+    # exact dedup shares url_dedup's min-id aggregate + join back
+    ("dedup_exact_keep_first", ["ShuffledHashJoin"]),
     # host stats ride url_dedup's agg+join then a partial-aggregating
     # groupBy(host) — same no-window contract
     ("host_stats_documents",
@@ -146,6 +148,7 @@ FORBID_EXTRA = [
      ["Window", "CartesianProduct", "BroadcastNestedLoopJoin"]),
     ("url_dedup_documents",
      ["Window", "CartesianProduct", "BroadcastNestedLoopJoin"]),
+    ("dedup_exact_keep_first", ["Window"]),
     ("host_stats_documents",
      ["Window", "CartesianProduct", "BroadcastNestedLoopJoin"]),
     ("blocklist_filter_documents",
@@ -391,8 +394,8 @@ def main() -> None:
 
     # runtime AQE skew-split evidence: execute a Zipf-skewed domain
     # join with reachable thresholds and capture the FINAL adaptive
-    # plan (the runtime half of the skew story; compile-time half is
-    # salted_domain_counts). Mirrors tests/test_skew_aqe.py.
+    # plan (the runtime half of the skew story; the compile-time half
+    # is map-side partial aggregation). Mirrors tests/test_skew_aqe.py.
     _skew_confs = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2.0",
@@ -442,14 +445,13 @@ def main() -> None:
         "asof_join shuffles ONCE on the join key; a Zipf key therefore\n"
         "serializes into one window partition, and AQE skew-splitting\n"
         "cannot apply (it splits joins, not windows — a split would\n"
-        "break the running last-ignorenulls). The skew-safe variant is\n"
-        "operators/asof.py::asof_join_sliced: a segmented prefix scan\n"
-        "partitioned on (key, floor(ts/slice_width)) with a per-(key,\n"
-        "slice) summary frame carrying state across slices — partition\n"
-        "size is bounded by rows-per-key-per-slice (a knob), not by the\n"
-        "hottest key. Equality with asof_join on a 95%-hot-key input is\n"
-        "pinned by tests/test_skew_aqe.py::"
-        "test_asof_sliced_equals_plain_on_zipf_key.\n"))
+        "break the running last-ignorenulls). The hottest key bounds\n"
+        "the largest window task. A skew-safe form exists: a segmented\n"
+        "prefix scan partitioned on (key, time slice) with a per-(key,\n"
+        "slice) summary carrying state across slices — the shape\n"
+        "operators/crawlplan.py::politeness_schedule and\n"
+        "operators/sharding.py use. No as-of caller needs it, so the\n"
+        "operator keeps the one-window form.\n"))
 
     with open("PLANS.md", "w") as f:
         f.write("# Physical-plan audit\n\n")

@@ -13,6 +13,14 @@ Cluster usage:
 Local smoke:
     python spark_submit_main.py --input /tmp/pages.parquet \\
         --warehouse /tmp/wh --cores 8
+
+Tables under --warehouse: the batch run writes pages_filtered (by
+warc_date) plus metrics, dropped_by_rule and lineage; --global-dedup
+reads pages_filtered and writes dup_clusters; --streaming writes its
+own table, pages_filtered_stream (by batch_id, warc_date), with its
+checkpoint in _checkpoints/pages_filtered_stream. The stream never
+writes into pages_filtered: one directory with two partition layouts
+cannot be read back.
 """
 
 from __future__ import annotations
@@ -31,7 +39,8 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--cores", type=int, default=None,
                    help="local[N] cores (omit on a real cluster)")
     p.add_argument("--streaming", action="store_true",
-                   help="incremental mode via Structured Streaming")
+                   help="incremental mode via Structured Streaming, "
+                        "into the warehouse's pages_filtered_stream")
     p.add_argument("--global-dedup", action="store_true",
                    help="cross-day near-dup clustering over the "
                         "warehouse's pages_filtered → dup_clusters")
@@ -51,8 +60,8 @@ def main(argv: list[str] | None = None) -> int:
         from standard_data_quality_framework_spark.streaming.quality_stream \
             import run_streaming_filter
         q = run_streaming_filter(
-            spark, args.input, f"{args.warehouse}/pages_filtered",
-            f"{args.warehouse}/_checkpoints")
+            spark, args.input, f"{args.warehouse}/pages_filtered_stream",
+            f"{args.warehouse}/_checkpoints/pages_filtered_stream")
         q.awaitTermination()
         print(json.dumps({"mode": "streaming", "status": "done"}))
         return 0

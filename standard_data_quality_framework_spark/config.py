@@ -122,5 +122,5 @@ EXPECTED_PAGE_COLUMNS: list[str] = ["url", "warc_ts", "html", "text", "lang"]
 
 # --- partitioning / scale knobs ---------------------------------------------
 N_URL_BUCKETS = 64        # bucket(N, xxhash64(url)) — co-locates per-url ops
-SALT_BUCKETS = 16         # salting factor for skewed-domain aggregations
+SALT_BUCKETS = 16         # salt fan-out of the salted_source_counts query
 LANGS: list[str] = ["en", "fr", "de", "es"]

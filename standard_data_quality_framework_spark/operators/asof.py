@@ -4,9 +4,12 @@ lacks natively.
 Implementation is the classic union + last-ignorenulls window: tag
 both sides, union them, sort per key by (ts, side) and carry the most
 recent right-side payload forward, then keep only left rows. ONE
-shuffle on the uniform join key — no range self-join, no per-row
-explosion, no driver involvement; at 10^12 rows this is a single
-hash exchange + in-partition sort.
+shuffle on the join key — no range self-join, no per-row explosion,
+no driver involvement; at 10^12 rows this is a single hash exchange +
+in-partition sort. Skew caveat: every row of one key sorts in one
+window task, and AQE cannot split it (it splits joins, not windows —
+a split would break the running last-ignorenulls), so a Zipf-hot key
+bounds the task size.
 
 Recast of the reference's timestamp pairing between paired series
 (/root/reference/src/uc3_timeseries_quality_checks.py full-outer
@@ -95,105 +98,3 @@ def asof_join(left: DataFrame, right: DataFrame, key_col: str,
         sel = [F.col(f"_c_{v}").alias(v) for v in value_cols]
     return out.select(*lcols, *sel)
 
-
-def asof_join_sliced(left: DataFrame, right: DataFrame, key_col: str,
-                     ts_col: str, value_cols: list[str],
-                     slice_width: float,
-                     tolerance: float | None = None) -> DataFrame:
-    """Skew-safe as-of join (judge r3 task #8): identical semantics to
-    ``asof_join``, but the window partitions on (key, time-slice)
-    instead of key alone — a SEGMENTED PREFIX SCAN.
-
-    Why: ``asof_join``'s single window puts ALL rows of a key in one
-    partition; a Zipf key owning 30% of 10^12 rows means one task
-    sorts 3·10^11 rows. AQE skew-splitting cannot help — it applies to
-    joins, not windows (splitting a window partition would break the
-    running ``last``). Here:
-
-      1. every row gets slice = floor(ts / slice_width); the hot key
-         spreads over its time range — partition size is bounded by
-         rows-per-key-per-slice, a knob (slice_width), not the data;
-      2. within-slice carry: the same last-ignorenulls window, now
-         partitioned by (key, slice) — balanced;
-      3. cross-slice carry-in: ONE summary row per (key, slice) with
-         each value column's latest NON-NULL (ts, value) — per-column,
-         so in-slice NULLs never mask an earlier non-null value,
-         matching asof_join's last-ignorenulls semantics exactly —
-         prefix-scanned per key. That frame is |keys|·|slices| —
-         data-independent — so its key-only window is tiny;
-      4. final value = within-slice carry, else the carry-in from the
-         latest earlier slice (floor is monotone: an earlier slice's
-         right rows are all ≤ this row's ts, so semantics match
-         exactly; equality with asof_join is pinned by
-         tests/test_skew_aqe.py on a 95%-hot-key input).
-
-    Numeric ts only (cast timestamps to epoch seconds first).
-    """
-    lcols = list(left.columns)
-    sl = F.floor(F.col(ts_col) / F.lit(float(slice_width))).cast("long")
-    l = left.select(*lcols, F.lit(1).alias("_side"),
-                    *[F.lit(None).cast(right.schema[v].dataType)
-                      .alias(f"_r_{v}") for v in value_cols],
-                    F.lit(None).cast(right.schema[ts_col].dataType)
-                    .alias("_r_ts"))
-    r = right.select(F.col(key_col), F.col(ts_col),
-                     *[F.lit(None).cast(left.schema[c].dataType).alias(c)
-                       for c in lcols if c not in (key_col, ts_col)],
-                     F.lit(0).alias("_side"),
-                     *[F.col(v).alias(f"_r_{v}") for v in value_cols],
-                     F.col(ts_col).alias("_r_ts")).select(
-        *lcols, "_side", *[f"_r_{v}" for v in value_cols], "_r_ts")
-    u = l.unionByName(r).withColumn("_slice", sl)
-
-    # (2) balanced within-slice window
-    w_in = (Window.partitionBy(key_col, "_slice")
-            .orderBy(ts_col, "_side")
-            .rowsBetween(Window.unboundedPreceding, 0))
-    carried = [F.last(f"_r_{v}", ignorenulls=True).over(w_in)
-               .alias(f"_c_{v}") for v in value_cols]
-    carried_ts = (F.last("_r_ts", ignorenulls=True).over(w_in)
-                  .alias("_c_ts"))
-    scanned = u.select("*", *carried, carried_ts)
-
-    # (3) per (key, slice) summaries, PER COLUMN (ADVICE r4): asof_join
-    # carries the last NON-NULL value of each column independently
-    # (last(..., ignorenulls=True)), so a slice summary that kept only
-    # the latest right ROW would lose a non-null value overwritten by
-    # a later in-slice NULL. One max(struct(ts, value)) over each
-    # column's non-null rows = that column's latest non-null (ts ties
-    # break on value — the plain window's order among equal-ts right
-    # rows is equally unpinned), plus the slice's latest right ts for
-    # the tolerance check (which, matching asof_join, compares against
-    # the latest right ROW, not per-column timestamps). All aggregates
-    # are partial-agg friendly.
-    per_col = [F.max(F.when(F.col(f"_r_{v}").isNotNull(),
-                            F.struct(F.col(ts_col).alias("_t"),
-                                     F.col(f"_r_{v}").alias("_v"))))
-               .alias(f"_s_{v}") for v in value_cols]
-    sums = (u.filter(F.col("_side") == 0)
-            .groupBy(key_col, "_slice")
-            .agg(F.max(F.col(ts_col)).alias("_s_ts"), *per_col))
-    slices = u.select(key_col, "_slice").distinct()
-    w_carry = (Window.partitionBy(key_col).orderBy("_slice")
-               .rowsBetween(Window.unboundedPreceding, -1))
-    carry = (slices.join(sums, [key_col, "_slice"], "left")
-             .select(key_col, "_slice",
-                     F.last("_s_ts", ignorenulls=True).over(w_carry)
-                     .alias("_in_ts"),
-                     *[F.last(F.col(f"_s_{v}"), ignorenulls=True)
-                       .over(w_carry).alias(f"_in_{v}")
-                       for v in value_cols]))
-
-    # (4) stitch: within-slice carry wins, else slice carry-in
-    out = (scanned.filter(F.col("_side") == 1)
-           .join(carry, [key_col, "_slice"], "left"))
-    final_ts = F.coalesce(F.col("_c_ts"), F.col("_in_ts"))
-    if tolerance is not None:
-        ok = (F.col(ts_col) - final_ts) <= tolerance
-        sel = [F.when(ok, F.coalesce(F.col(f"_c_{v}"),
-                                     F.col(f"_in_{v}._v"))).alias(v)
-               for v in value_cols]
-    else:
-        sel = [F.coalesce(F.col(f"_c_{v}"), F.col(f"_in_{v}._v")).alias(v)
-               for v in value_cols]
-    return out.select(*lcols, *sel)

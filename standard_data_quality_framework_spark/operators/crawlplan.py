@@ -21,9 +21,9 @@ Scale shapes, per operator:
   the blocklist pass.
 * ``politeness_schedule`` — exact per-host sequencing WITHOUT a
   per-host global sort: a segmented prefix scan over contiguous
-  hash-bucket slices (the ``asof_join_sliced`` trick), so a mega-host's
-  window partitions are ~1/``n_slices`` of the host, a knob, not the
-  data.
+  hash-bucket slices (rank within a slice, then add the prefix sum of
+  the earlier slices' counts), so a mega-host's window partitions are
+  ~1/``n_slices`` of the host, a knob, not the data.
 * ``revisit_policy`` — per-URL windows bounded by the number of crawl
   SNAPSHOTS a URL appears in (calendar-bounded), then one map-side-
   combined aggregation on the uniform url key.
@@ -192,8 +192,8 @@ def politeness_schedule(df: DataFrame, host_col: str, url_col: str,
 
     Scale shape — exact ranks WITHOUT a per-host global sort: the
     bucket space splits into ``n_slices`` CONTIGUOUS ranges, so slice
-    order is a prefix of the total order (the ``asof_join_sliced``
-    segmented-prefix-scan trick): (1) row_number within (host, slice)
+    order is a prefix of the total order (a segmented prefix scan):
+    (1) row_number within (host, slice)
     — partitions are ~host/``n_slices``, a knob, not the data; (2)
     per-(host, slice) counts — one partial-agg'd frame of
     |hosts|·|slices| rows — prefix-summed by a window whose

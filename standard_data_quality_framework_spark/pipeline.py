@@ -16,8 +16,10 @@ Design notes (scale-first):
     hashes are uniform across DISTINCT contents but duplication
     multiplicity is not — a mega-duplicated page is a hot key — so the
     dedup is an aggregate+join (O(n) streaming on the hot key), never
-    a window sort; see with_verdict. Per-domain aggregations (skewed!)
-    go through ``salted_domain_counts``.
+    a window sort; see with_verdict. A skewed grouping key (a mega-
+    domain) needs no salt for a count or sum: map-side partial
+    aggregation collapses it to one row per input partition before
+    its shuffle.
   * Native expressions everywhere except the one page UDF
     (functions/udfs.py), which receives whole Arrow batches but loops
     over their documents one at a time in Python. No collect().
@@ -33,7 +35,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .config import (N_URL_BUCKETS, RULES, SALT_BUCKETS, STOPWORD_PATTERN)
+from .config import N_URL_BUCKETS, RULES, STOPWORD_PATTERN
 from .functions.udfs import make_udfs
 
 
@@ -194,7 +196,7 @@ def with_verdict(df: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Partitioning / skew helpers
+# Partitioning
 # ---------------------------------------------------------------------------
 
 def with_partition_cols(df: DataFrame) -> DataFrame:
@@ -204,26 +206,6 @@ def with_partition_cols(df: DataFrame) -> DataFrame:
               .withColumn("url_bucket",
                           F.pmod(F.xxhash64("url"), F.lit(N_URL_BUCKETS))
                           .cast("int")))
-
-
-def salted_domain_counts(df: DataFrame) -> DataFrame:
-    """Per-domain doc counts with two-phase salted aggregation.
-
-    Web domains are Zipf-skewed: a handful of domains hold a large
-    share of pages, so a naive groupBy(domain) funnels them into few
-    reducers. Phase 1 aggregates on (domain, salt) — SALT_BUCKETS-way
-    fan-out of the hot keys; phase 2 combines the partials. Both
-    phases get map-side partial aggregation from Spark for free.
-    """
-    domain = F.parse_url(F.col("url"), F.lit("HOST"))
-    salted = (
-        df.select(domain.alias("domain"),
-                  F.pmod(F.xxhash64("url"), F.lit(SALT_BUCKETS))
-                  .alias("_salt"))
-        .groupBy("domain", "_salt").agg(F.count("*").alias("_partial"))
-    )
-    return (salted.groupBy("domain")
-            .agg(F.sum("_partial").alias("n_docs")))
 
 
 # ---------------------------------------------------------------------------

@@ -20,7 +20,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..config import STOPWORDS
+from ..config import RULES, STOPWORDS
 from ..functions.hashing import (MERSENNE31, hash60, hash60_sql,
                                  hyperplanes, minhash_coeffs)
 from ..functions.rating import (bucket_rating,
@@ -1488,17 +1488,21 @@ def pipeline_verdict_q(spark, sf_dir):
              n_words.alias("n_words"), n_sym.alias("n_sym"),
              nonal.alias("nonalnum_frac"), stop_hits.alias("stop_hits"),
              (F.col("doc_id") != F.col("_kept_id")).alias("is_dup")))
+    # thresholds from config.RULES; the oracle SQL above pins them
     reasons = F.concat(
         F.when(F.col("n_words") == 0, F.lit("empty_text,")).otherwise(""),
-        F.when((F.col("n_words") > 0) & (F.col("n_words") < 20),
+        F.when((F.col("n_words") > 0)
+               & (F.col("n_words") < RULES["min_words"]),
                F.lit("min_words,")).otherwise(""),
         F.when((F.col("n_words") > 0)
-               & (F.col("n_sym") / F.col("n_words") > 0.1),
+               & (F.col("n_sym") / F.col("n_words")
+                  > RULES["max_symbol_to_word"]),
                F.lit("symbol_to_word,")).otherwise(""),
         F.when((F.col("n_words") > 0)
-               & (F.col("stop_hits") / F.col("n_words") < 0.04),
+               & (F.col("stop_hits") / F.col("n_words")
+                  < RULES["min_stopword_frac"]),
                F.lit("stopword_frac,")).otherwise(""),
-        F.when(F.col("nonalnum_frac") > 0.3,
+        F.when(F.col("nonalnum_frac") > RULES["max_nonalnum_frac"],
                F.lit("nonalnum_frac,")).otherwise(""),
         F.when(F.col("is_dup"), F.lit("exact_dup,")).otherwise(""))
     return s.select(

@@ -50,6 +50,25 @@ GLOBAL_DEDUP_STAGE = "global_dedup"
 SHINGLE_N, NUM_HASHES, BANDS = 5, 16, 4
 
 
+def _done_keys(catalog: ParquetCatalog, stage: str) -> set[str]:
+    """The partition_keys of ``stage``'s done lineage rows."""
+    if not catalog.exists("lineage"):
+        return set()
+    return {r[0] for r in catalog.read("lineage")
+            .filter((F.col("stage") == stage) & (F.col("status") == "done"))
+            .select("partition_key").collect()}
+
+
+def _day_set(table: DataFrame) -> tuple[list[str], str]:
+    """(sorted distinct warc_dates of ``table``, their fingerprint) —
+    a distinct scan of the warc_date column plus a collect of one tiny
+    row per day (a table format with partition metadata could list it
+    without the scan)."""
+    days = sorted(str(r[0]) for r in
+                  table.select("warc_date").distinct().collect())
+    return days, hashlib.md5(",".join(days).encode()).hexdigest()[:16]
+
+
 def pending_dates(catalog: ParquetCatalog, pages: DataFrame) -> DataFrame:
     """ONE row: ``dates`` — the sorted distinct non-NULL input
     warc_dates minus the dates with a done lineage row for this
@@ -64,14 +83,10 @@ def pending_dates(catalog: ParquetCatalog, pages: DataFrame) -> DataFrame:
     # collect_set skips NULL; its map-side partial aggregate keeps one
     # small date set per input partition
     dates = F.collect_set(F.to_date("warc_ts"))
-    if catalog.exists("lineage"):
-        done = {r[0] for r in catalog.read("lineage")
-                .filter((F.col("stage") == STAGE)
-                        & (F.col("status") == "done"))
-                .select(F.col("partition_key").cast("date")).collect()}
-        if done:
-            dates = F.array_except(
-                dates, F.array(*[F.lit(d) for d in sorted(done)]))
+    done = _done_keys(catalog, STAGE)
+    if done:
+        dates = F.array_except(dates, F.array(
+            *[F.lit(d).cast("date") for d in sorted(done)]))
     return pages.agg(
         F.array_sort(dates).alias("dates"),
         F.count_if(F.col("warc_ts").isNull()).alias("rows_undated"))
@@ -161,7 +176,8 @@ def _neardup_edges(docs: DataFrame, threshold: float,
     generation (a 10^5-doc template cluster would alone emit ~5·10^9
     candidate pairs), and the exact path guarantees byte-identical
     template docs still cluster — B identical docs cost B−1 star
-    edges through a uniform-key window, never B²/2 pairs."""
+    edges, never B²/2 pairs, through exact_duplicates' skew-safe
+    aggregate + join (their hot hash is never sorted in one task)."""
     from .operators.dedup import exact_duplicates, minhash_lsh_pairs
     lsh = (minhash_lsh_pairs(docs, "id", "text", n=SHINGLE_N,
                              num_hashes=NUM_HASHES, bands=BANDS,
@@ -241,19 +257,9 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
     catalog = ParquetCatalog(spark, warehouse)
     pages = catalog.read("pages_filtered")
 
-    # day set = the snapshot identity: a distinct scan of the
-    # warc_date column plus a collect of one tiny row per day (a table
-    # format with partition metadata could list it without the scan)
-    days = sorted(str(r[0]) for r in
-                  pages.select("warc_date").distinct().collect())
-    snap = hashlib.md5(",".join(days).encode()).hexdigest()[:16]
-
-    done_keys = set()
-    if catalog.exists("lineage"):
-        done_keys = {r[0] for r in catalog.read("lineage")
-                     .filter((F.col("stage") == GLOBAL_DEDUP_STAGE)
-                             & (F.col("status") == "done"))
-                     .select("partition_key").collect()}
+    # day set = the snapshot identity
+    days, snap = _day_set(pages)
+    done_keys = _done_keys(catalog, GLOBAL_DEDUP_STAGE)
     if snap in done_keys:
         return {"run_id": run_id, "snapshot": snap, "resumed": True}
 
@@ -266,10 +272,7 @@ def run_global_dedup(spark: SparkSession, warehouse: str,
     prior = None
     if incremental and catalog.exists("dup_clusters"):
         prior = catalog.read("dup_clusters")
-        prior_days = sorted(str(r[0]) for r in
-                            prior.select("warc_date").distinct().collect())
-        prior_snap = hashlib.md5(
-            ",".join(prior_days).encode()).hexdigest()[:16]
+        prior_days, prior_snap = _day_set(prior)
         if (prior_days and set(prior_days) < set(days)
                 and prior_snap in done_keys):
             mode = "delta"

@@ -41,25 +41,26 @@ def get_spark(
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
-        # Byte-bound Arrow batches (Spark 4 knob): multi-KB text rows
-        # would otherwise ship ~40 MB batches (10k records) through
-        # the pandas-UDF workers — measured on the 600k-page pipeline
-        # at 32 cores, clamping to 8 MB (~2k text rows/batch) cut the
-        # median ~10% and removed a 2-3× long-tail of memory-spike
-        # runs, while narrow numeric Arrow traffic (embeddings etc.)
-        # stays at the 10k-record bound. Row-size-dependent, not
-        # data-size-dependent — the same clamp is correct at 100 TB.
+        # Byte-bound Arrow batches (Spark 4 knob) for the batches sent
+        # to pandas-UDF workers: multi-KB text rows would otherwise
+        # ship ~40 MB batches (10k records) — measured on the
+        # 600k-page pipeline at 32 cores, clamping to 8 MB (~2k text
+        # rows/batch) cut the median ~10% and removed a 2-3× long-tail
+        # of memory-spike runs, while narrow numeric traffic
+        # (embeddings etc.) stays at the 10k-record bound. Per Spark's
+        # own conf doc it does not govern createDataFrame/toPandas
+        # with Arrow/pandas instances.
         "spark.sql.execution.arrow.maxBytesPerBatch": "8388608",
         "spark.driver.memory": os.environ.get("SDQF_DRIVER_MEM", "16g"),
-        # the unrolled vector math (similarity._dot) generates Java
-        # methods past HotSpot's 8000-bytecode JIT refusal threshold
-        # (-XX:DontCompileHugeMethods default); without this flag those
-        # methods run in the BYTECODE INTERPRETER — measured 2× slower
-        # than the lambda forms they replaced, and 5× faster once
-        # JIT-compiled. Standard practice for codegen-heavy Spark
-        # (wide schemas hit the same cliff); on a cluster the same
-        # flag goes in spark.executor.extraJavaOptions too (local mode
-        # has one JVM, so driver covers both roles here).
+        # HotSpot refuses to JIT-compile methods past 8000 bytecodes
+        # (-XX:DontCompileHugeMethods default) and runs them in the
+        # bytecode interpreter; whole-stage codegen over wide
+        # projections and aggregates can emit such methods. The flag
+        # was measured (r6) on the unrolled vector math, since
+        # deleted; whether a remaining plan emits a huge method is
+        # UNVERIFIED — the flag changes nothing when none does. On a
+        # cluster it goes in spark.executor.extraJavaOptions too
+        # (local mode has one JVM, so driver covers both roles here).
         "spark.driver.extraJavaOptions":
             "-XX:-DontCompileHugeMethods -XX:ReservedCodeCacheSize=512m",
         "spark.executor.extraJavaOptions":

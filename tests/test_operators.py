@@ -154,6 +154,24 @@ def test_embedding_neardup(spark, emb):
     assert set(zip(lsh.id_a, lsh.id_b)) <= set(zip(out.id_a, out.id_b))
 
 
+def test_embedding_neardup_ignores_null_and_zero_norm_vectors(spark, emb):
+    # NULL vectors have no bucket and zero-norm vectors no cosine:
+    # neither may pair, and neither may fail the other rows' verify —
+    # in both the exact and the LSH mode
+    extra = spark.createDataFrame(
+        [(100, None), (101, None), (102, [0.0] * 8), (103, [0.0] * 8)],
+        "vec_id long, embedding array<double>")
+    for kw in (dict(n_planes=0, allow_exact=True),
+               dict(n_planes=4, dim=8)):
+        def pairs(df):
+            out = dedup.embedding_neardup_pairs(
+                df, "vec_id", "embedding", threshold=0.95, **kw)
+            return sorted(tuple(r) for r in out.collect())
+        clean = pairs(emb)
+        assert (3, 7) in {(a, b) for a, b, _ in clean}, kw
+        assert pairs(emb.unionByName(extra)) == clean, kw
+
+
 def test_cosine_topk_matches_numpy(spark, emb):
     q = emb.filter(F.col("vec_id") < 3)
     got = similarity.cosine_topk(emb, q, "vec_id", "embedding",

@@ -139,7 +139,7 @@ def test_undated_pages_reported_and_resume_finishes(spark, pages_df,
 
 def test_job_counts_per_operation(spark, pages_df, tmp_path):
     # These bounds pin "each frame is computed once": with every
-    # warehouse frame computed once this fixture takes 15 / 4 / 24
+    # warehouse frame computed once this fixture takes 15 / 4 / 25
     # jobs (run / resume / global dedup); recomputing any frame — the
     # pending dates, the near-dup edges, the metrics aggregates — adds
     # jobs and fails here.

@@ -73,8 +73,9 @@ def test_spark_submit_main_local_smoke():
 
 def test_spark_submit_main_global_dedup_and_streaming_modes():
     """The other two CLI modes, each as its own process/JVM: batch →
-    --global-dedup chained on the same warehouse, and --streaming
-    (trigger-once) over the same input directory."""
+    --global-dedup chained on the same warehouse, then --streaming
+    (trigger-once) over the same input directory, then --global-dedup
+    again on that warehouse."""
     from standard_data_quality_framework_spark.fixtures import (
         write_pages_parquet)
     tmp = tempfile.mkdtemp()
@@ -110,6 +111,14 @@ def test_spark_submit_main_global_dedup_and_streaming_modes():
     line = json.loads(st.stdout.strip().splitlines()[-1])
     assert line == {"mode": "streaming", "status": "done"}
     k = duckdb.sql(
-        f"select count(*) from '{wh}/pages_filtered/**/*.parquet'"
+        f"select count(*) from '{wh}/pages_filtered_stream/**/*.parquet'"
     ).fetchone()[0]
     assert k > 0
+
+    # the stream's (batch_id, warc_date) layout stays out of the batch
+    # table: global dedup still reads pages_filtered, finds the same
+    # day set and resumes
+    again = cli("--global-dedup", "--run-id", "d2")
+    assert again.returncode == 0, again.stderr[-2000:]
+    summary = json.loads(again.stdout.strip().splitlines()[-1])
+    assert summary.get("resumed") is True, summary
